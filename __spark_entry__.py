@@ -5,6 +5,7 @@ exposes every implemented operator from SURVEY.md §2 as
 ``(spark, sf_dir) -> DataFrame``; ``oracle_sql()`` gives the DuckDB
 equivalent for the correctness gate. Column aliases match exactly on
 both sides (the driver sorts columns by name before value-hashing).
+Both registries are discovered from ``parquet_generator_spark.plans``.
 """
 
 from __future__ import annotations
@@ -13,93 +14,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_generator_spark import plans
 from parquet_generator_spark.plans import analytics as A
-from parquet_generator_spark.plans import analytics2 as A2
-from parquet_generator_spark.plans import analytics3 as A3
-from parquet_generator_spark.plans import analytics4 as A4
-from parquet_generator_spark.plans import analytics5 as A5
-from parquet_generator_spark.plans import analytics6 as A6
-from parquet_generator_spark.plans import analytics7 as A7
-from parquet_generator_spark.plans import llm_queries as L
-from parquet_generator_spark.plans import llm_queries2 as L2
-from parquet_generator_spark.plans import llm_queries3 as L3
-from parquet_generator_spark.plans import llm_queries4 as L4
-from parquet_generator_spark.plans import llm_queries5 as L5
-from parquet_generator_spark.plans import llm_queries6 as L6
-from parquet_generator_spark.plans import llm_queries7 as L7
-from parquet_generator_spark.plans import llm_queries8 as L8
-from parquet_generator_spark.plans import llm_queries9 as L9
-from parquet_generator_spark.plans import llm_queries10 as L10
-from parquet_generator_spark.plans import llm_queries11 as L11
-from parquet_generator_spark.plans import llm_queries12 as L12
-from parquet_generator_spark.plans import llm_queries13 as L13
-from parquet_generator_spark.plans import llm_queries14 as L14
-from parquet_generator_spark.plans import llm_queries15 as L15
-from parquet_generator_spark.plans import llm_queries16 as L16
-from parquet_generator_spark.plans import llm_queries17 as L17
-from parquet_generator_spark.plans import llm_queries18 as L18
-from parquet_generator_spark.plans import llm_queries19 as L19
-from parquet_generator_spark.plans import llm_queries20 as L20
-from parquet_generator_spark.plans import llm_queries21 as L21
-from parquet_generator_spark.plans import llm_queries22 as L22
-from parquet_generator_spark.plans import llm_queries23 as L23
-from parquet_generator_spark.plans import llm_queries24 as L24
-from parquet_generator_spark.plans import llm_queries25 as L25
-from parquet_generator_spark.plans import llm_queries26 as L26
-from parquet_generator_spark.plans import llm_queries27 as L27
-from parquet_generator_spark.plans import llm_queries28 as L28
-from parquet_generator_spark.plans import pipeline_queries as P
-from parquet_generator_spark.plans import reference_queries as R
-from parquet_generator_spark.plans import reference_queries2 as R2
-from parquet_generator_spark.plans import reference_queries3 as R3
-from parquet_generator_spark.plans import reference_queries4 as R4
-from parquet_generator_spark.plans import reference_queries5 as R5
-from parquet_generator_spark.plans import reference_queries6 as R6
-from parquet_generator_spark.plans import reference_queries7 as R7
-from parquet_generator_spark.plans import reference_queries8 as R8
-from parquet_generator_spark.plans import reference_queries9 as R9
-from parquet_generator_spark.plans import reference_queries10 as R10
-from parquet_generator_spark.plans import reference_queries11 as R11
-from parquet_generator_spark.plans import reference_queries12 as R12
-from parquet_generator_spark.plans import reference_queries13 as R13
-from parquet_generator_spark.plans import reference_queries14 as R14
-from parquet_generator_spark.plans import reference_queries15 as R15
-from parquet_generator_spark.plans import reference_queries16 as R16
-from parquet_generator_spark.plans import reference_queries17 as R17
-from parquet_generator_spark.plans import reference_queries18 as R18
-from parquet_generator_spark.plans import reference_queries19 as R19
-from parquet_generator_spark.plans import reference_queries20 as R20
-from parquet_generator_spark.plans import reference_queries21 as R21
-from parquet_generator_spark.plans import reference_queries22 as R22
-from parquet_generator_spark.plans import reference_queries23 as R23
-from parquet_generator_spark.plans import reference_queries24 as R24
-from parquet_generator_spark.plans import reference_queries25 as R25
-from parquet_generator_spark.plans import reference_queries26 as R26
-from parquet_generator_spark.plans import reference_queries27 as R27
-from parquet_generator_spark.plans import reference_queries28 as R28
-from parquet_generator_spark.plans import reference_queries29 as R29
-from parquet_generator_spark.plans import reference_queries30 as R30
-from parquet_generator_spark.plans import reference_queries31 as R31
-from parquet_generator_spark.plans import reference_queries32 as R32
-from parquet_generator_spark.plans import scale_queries as SC
-from parquet_generator_spark.plans import streaming_queries as S
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# The correctness sampler reads 50 entries from the front of queries().
-#
-# ROUND-13 LEDGER: zero debt entered the round (CORRECTNESS_r12 =
-# 50/50 MATCH; every key green at its latest hard sample). The
-# window holds the 13 round-13 additions, then 17 re-fronted keys
-# whose rendering changed this round (the analyzer-match class now
-# serves from the central analyzed store; the french/romanian
-# canonical-fidelity stemmer fixes; the esql KNN zero-vector guard
-# and FUSE per-document dedup), then 26 re-verification slots.
-# Every key rotated out is hard-sampled MATCH in CORRECTNESS_r12 at
-# its latest sample, so rotation creates no new debt.
+# The correctness gate samples the first 50 entries of
+# queries(), so these lead: the keys added or re-rendered most
+# recently, then re-verification slots. Rotation history lives in
+# git and CORRECTNESS_r*.json.
 FRONT_KEYS = [
-    # ---- round-13 additions (driver-sim verified on registration
-    # at sf0.001 AND sf0.01) --------------------------------------
     "dsl_match_analyzer_fi",
     "dsl_match_analyzer_hu",
     "dsl_match_analyzer_ar",
@@ -113,19 +37,6 @@ FRONT_KEYS = [
     "esql_row",
     "esql_show",
     "dsl_retriever_linear",
-    # ---- re-fronted: their RENDERING changed this round ----------
-    # (a) the whole analyzer-match class now serves from the central
-    # ingest-time analyzed store (plans/analyzed_store.py) — the
-    # oracles still recompute from raw text, so these hard rows
-    # prove stored == query-time for every language;
-    # (b) the french/romanian stemmers got canonical-fidelity fixes
-    # (both engines changed together — the hard rows re-cover them);
-    # (c) esql KNN gained the zero-vector NULL guard and FUSE the
-    # per-document dedup (both renderers changed);
-    # (d) the shared literal-cosine kernel gained the same
-    # zero-vector NULL guard (similarity.py, both engines — values
-    # unchanged on this corpus, rendering changed) — every key on
-    # that kernel is re-fronted.
     "dsl_match_analyzer_de",
     "dsl_match_analyzer_fr",
     "dsl_match_analyzer_es",
@@ -149,10 +60,6 @@ FRONT_KEYS = [
     "dsl_multi_knn",
     "ann_int8_rescore",
     "matryoshka_overlap",
-    # ---- re-verification slots (window is exactly 50) ------------
-    # round-12 keys held for a second consecutive hard sample, then
-    # r11-era keys; everything rotated out is hard-green in
-    # CORRECTNESS_r12 at its latest sample (zero debt created).
     "hash_sample",
     "context_window_fill",
     "esql_rate",
@@ -167,29 +74,7 @@ FRONT_KEYS = [
     "esql_dissect",
     "dsl_scripted_metric_loop",
     "esql_enrich",
-    # (esql_rename_drop rotated out for esql_rate_week_served;
-    # hard-green in CORRECTNESS_r12 at its latest sample)
-    # (esql_grok rotated out for dsl_rrf_weighted; hard-green in
-    # CORRECTNESS_r12 at its latest sample)
-    # (esql_case_like rotated out for dsl_match_analyzer_ar; it is
-    # hard-green in CORRECTNESS_r12 at its latest sample)
-    # (esql_mv_funcs, esql_stats_percentiles, esql_inlinestats,
-    # esql_lookup_join, esql_date_extract, esql_change_point rotated
-    # out for the six cosine-kernel re-fronts; all hard-green in
-    # CORRECTNESS_r12 at their latest samples)
-    # (esql_bucket_numeric / esql_stats_where rotated out with
-    # esql_top_agg for the three later round-13 additions; all
-    # hard-green in CORRECTNESS_r12 at their latest samples)
-    # (esql_top_agg rotated out to keep the window at exactly 50
-    # when dsl_match_analyzer_hu landed — it is hard-green in
-    # CORRECTNESS_r12 at its latest sample, so no debt is created)
 ]
-
-
-def _front_first(all_entries: dict) -> dict:
-    front = {k: all_entries[k] for k in FRONT_KEYS if k in all_entries}
-    rest = {k: v for k, v in all_entries.items() if k not in front}
-    return {**front, **rest}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -198,160 +83,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, QueryFn]:
-    return _front_first({
-        **L.QUERIES,
-        **L2.QUERIES,
-        **L3.QUERIES,
-        **L4.QUERIES,
-        **L5.QUERIES,
-        **L6.QUERIES,
-        **L7.QUERIES,
-        **L8.QUERIES,
-        **L9.QUERIES,
-        **L10.QUERIES,
-        **L11.QUERIES,
-        **L12.QUERIES,
-        **L13.QUERIES,
-        **L14.QUERIES,
-        **L15.QUERIES,
-        **L16.QUERIES,
-        **L17.QUERIES,
-        **L18.QUERIES,
-        **L19.QUERIES,
-        **L20.QUERIES,
-        **L21.QUERIES,
-        **L22.QUERIES,
-        **L23.QUERIES,
-        **L24.QUERIES,
-        **L25.QUERIES,
-        **L26.QUERIES,
-        **L27.QUERIES,
-        **L28.QUERIES,
-        **SC.QUERIES,
-        **P.QUERIES,
-        **S.QUERIES,
-        **R.QUERIES,
-        **R2.QUERIES,
-        **R3.QUERIES,
-        **R4.QUERIES,
-        **R5.QUERIES,
-        **R6.QUERIES,
-        **R7.QUERIES,
-        **R8.QUERIES,
-        **R9.QUERIES,
-        **R10.QUERIES,
-        **R11.QUERIES,
-        **R12.QUERIES,
-        **R13.QUERIES,
-        **R14.QUERIES,
-        **R15.QUERIES,
-        **R16.QUERIES,
-        **R17.QUERIES,
-        **R18.QUERIES,
-        **R19.QUERIES,
-        **R20.QUERIES,
-        **R21.QUERIES,
-        **R22.QUERIES,
-        **R23.QUERIES,
-        **R24.QUERIES,
-        **R25.QUERIES,
-        **R26.QUERIES,
-        **R27.QUERIES,
-        **R28.QUERIES,
-        **R29.QUERIES,
-        **R30.QUERIES,
-        **R31.QUERIES,
-        **R32.QUERIES,
-        "sessionize": A.sessionize,
-        "q1_pricing_summary": A.q1_pricing_summary,
-        "q3_shipping_priority": A.q3_shipping_priority,
-        "q5_local_supplier": A.q5_local_supplier,
-        "q6_forecast_revenue": A.q6_forecast_revenue,
-        "topk_per_group": A.topk_per_group,
-        **A2.QUERIES,
-        **A3.QUERIES,
-        **A4.QUERIES,
-        **A5.QUERIES,
-        **A6.QUERIES,
-        **A7.QUERIES,
-    })
+    found = plans.discover()[0]
+    return {**{k: found[k] for k in FRONT_KEYS}, **found}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        **L.ORACLES,
-        **L2.ORACLES,
-        **L3.ORACLES,
-        **L4.ORACLES,
-        **L5.ORACLES,
-        **L6.ORACLES,
-        **L7.ORACLES,
-        **L8.ORACLES,
-        **L9.ORACLES,
-        **L10.ORACLES,
-        **L11.ORACLES,
-        **L12.ORACLES,
-        **L13.ORACLES,
-        **L14.ORACLES,
-        **L15.ORACLES,
-        **L16.ORACLES,
-        **L17.ORACLES,
-        **L18.ORACLES,
-        **L19.ORACLES,
-        **L20.ORACLES,
-        **L21.ORACLES,
-        **L22.ORACLES,
-        **L23.ORACLES,
-        **L24.ORACLES,
-        **L25.ORACLES,
-        **L26.ORACLES,
-        **L27.ORACLES,
-        **L28.ORACLES,
-        **SC.ORACLES,
-        **P.ORACLES,
-        **S.ORACLES,
-        **R.ORACLES,
-        **R2.ORACLES,
-        **R3.ORACLES,
-        **R4.ORACLES,
-        **R5.ORACLES,
-        **R6.ORACLES,
-        **R7.ORACLES,
-        **R8.ORACLES,
-        **R9.ORACLES,
-        **R10.ORACLES,
-        **R11.ORACLES,
-        **R12.ORACLES,
-        **R13.ORACLES,
-        **R14.ORACLES,
-        **R15.ORACLES,
-        **R16.ORACLES,
-        **R17.ORACLES,
-        **R18.ORACLES,
-        **R19.ORACLES,
-        **R20.ORACLES,
-        **R21.ORACLES,
-        **R22.ORACLES,
-        **R23.ORACLES,
-        **R24.ORACLES,
-        **R25.ORACLES,
-        **R26.ORACLES,
-        **R27.ORACLES,
-        **R28.ORACLES,
-        **R29.ORACLES,
-        **R30.ORACLES,
-        **R31.ORACLES,
-        **R32.ORACLES,
-        "sessionize": A.SESSIONIZE_ORACLE,
-        "q1_pricing_summary": A.Q1_ORACLE,
-        "q3_shipping_priority": A.Q3_ORACLE,
-        "q5_local_supplier": A.Q5_ORACLE,
-        "q6_forecast_revenue": A.Q6_ORACLE,
-        "topk_per_group": A.TOPK_ORACLE,
-        **A2.ORACLES,
-        **A3.ORACLES,
-        **A4.ORACLES,
-        **A5.ORACLES,
-        **A6.ORACLES,
-        **A7.ORACLES,
-    }
+    return plans.discover()[1]

@@ -213,6 +213,25 @@ def band_buckets_np(mat: np.ndarray, planes: np.ndarray,
     return out
 
 
+def band_buckets_batch(vs, planes: np.ndarray, n_bands: int):
+    """:func:`band_buckets_np` over one Arrow batch (a pandas Series
+    of embedding arrays), as a Series of per-row bucket arrays.
+
+    PRECONDITION: embeddings are non-null, fixed-dimension arrays
+    (the embeddings table contract; enforced at generation).
+    np.array over a ragged/null batch would fail obscurely where the
+    replaced SQL fold degraded to bucket 0, so a contract break
+    raises ``ValueError`` instead."""
+    import pandas as pd
+    if len(vs) == 0:
+        return pd.Series([], dtype="object")
+    rows = vs.tolist()
+    if not all(r is not None and len(r) == len(rows[0]) for r in rows):
+        raise ValueError("band_buckets: null or ragged embedding in batch")
+    mat = np.array(rows, dtype=np.float64)
+    return pd.Series(list(band_buckets_np(mat, planes, n_bands)))
+
+
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int,
              planes: np.ndarray, id_col: str = "vec_id",
              vec_col: str = "embedding") -> DataFrame:
@@ -716,20 +735,7 @@ def embedding_dup_pairs_lsh(df: DataFrame, threshold: float,
     # bucket-local verify (guide §4.2).
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _buckets_udf(vs):
-        # PRECONDITION: embeddings are non-null, fixed-dimension
-        # arrays (the embeddings table contract; enforced at
-        # generation). np.array over a ragged/null batch would
-        # raise where the replaced SQL fold degraded to bucket 0 —
-        # assert so a contract break fails loudly, not obscurely.
-        import pandas as pd
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        rows = vs.tolist()
-        assert all(r is not None and len(r) == len(rows[0])
-                   for r in rows), \
-            "band_buckets: null or ragged embedding in batch"
-        mat = np.array(rows, dtype=np.float64)
-        return pd.Series(list(band_buckets_np(mat, planes, n_bands)))
+        return band_buckets_batch(vs, planes, n_bands)
 
     # asNondeterministic: posexplode plants an implicit
     # size(..)>0 filter, and the optimizer duplicates a

@@ -203,9 +203,12 @@ def read_elasticsearch(spark: SparkSession, cfg: EsSourceConfig,
 
 def decode_docs(df: DataFrame, column: str,
                 schema: T.StructType) -> DataFrame:
-    """Lenient JSON decode of a document column to top-level fields."""
+    """Lenient JSON decode of a document column to top-level fields;
+    every other column (e.g. a ``source_date`` partition key) passes
+    through ahead of them."""
+    keep = [c for c in df.columns if c != column]
     return (df.withColumn("_rec", lenient_decode(F.col(column), schema))
-              .select("_rec.*"))
+              .select(*keep, "_rec.*"))
 
 
 def read_json_fixture(spark: SparkSession, path: str,

@@ -176,3 +176,26 @@ def test_maximal_dup_spans_merges_overlapping_windows(spark):
     assert got[1]["n_spans"] == 1
     assert got[1]["max_dup_span"] == 10
     assert got[1]["dup_tokens"] == 10       # never exceeds the doc
+
+
+def test_bm25_term_with_quote_builds_and_counts(spark, tmp_path,
+                                                monkeypatch):
+    """Query terms reach the plan as literals, never as SQL text: a
+    term containing ``'`` builds, and counts 0 since no token can
+    contain a quote, while the other term still counts exactly."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    _docs(spark, [(0, "vector join vector", "en", "s", 18),
+                  (1, "it's a window", "en", "s", 13),
+                  (2, "nothing here", "en", "s", 12)]
+          ).write.parquet(str(d / "documents.parquet"))
+    monkeypatch.setattr(L5, "BM25_TERMS", ("vector", "it's"))
+    per_doc = {}
+    lazy = L5._cache.lazy
+    monkeypatch.setattr(L5._cache, "lazy",
+                        lambda df: per_doc.setdefault("df", lazy(df)))
+    top = L5.bm25_topk(spark, str(d)).collect()
+    assert [(r["rank"], r["doc_id"]) for r in top] == [(1, 0)]
+    tf = {r["doc_id"]: (r["_tf0"], r["_tf1"])
+          for r in per_doc["df"].collect()}
+    assert tf == {0: (2, 0), 1: (0, 0), 2: (0, 0)}

@@ -287,6 +287,19 @@ def test_band_buckets_np_matches_sql(spark):
             assert sql[i] == list(got[i]), f"row {i} diverges"
 
 
+@pytest.mark.parametrize("batch", [[[1.0, 2.0], [3.0]],
+                                   [[1.0, 2.0], None]])
+def test_band_buckets_batch_rejects_ragged_batch(batch):
+    """The embeddings contract check survives ``python -O``."""
+    import pandas as pd
+
+    planes = similarity.make_hyperplanes(2, 4, seed=1)
+    assert len(similarity.band_buckets_batch(
+        pd.Series([[1.0, 2.0], [3.0, 4.0]]), planes, 2)) == 2
+    with pytest.raises(ValueError, match="ragged"):
+        similarity.band_buckets_batch(pd.Series(batch), planes, 2)
+
+
 def test_lsh_bucket_cap_skips_hot_bucket(spark):
     """A degenerate bucket (many docs sharing every band signature)
     is skipped above the cap — its pairs disappear, everything else
