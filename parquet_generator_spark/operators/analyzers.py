@@ -31,16 +31,14 @@ org.apache.lucene.analysis.en.EnglishAnalyzer#ENGLISH_STOP_WORDS_SET).
 
 from __future__ import annotations
 
+import importlib
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from parquet_generator_spark.operators.porter import (
-    porter_stem,
-    porter_stem_sql,
-)
+from parquet_generator_spark.operators.stem_sql import let, quote_list
 
 # Lucene EnglishAnalyzer default stop words (public constant)
 LUCENE_ENGLISH_STOPWORDS = frozenset("""
@@ -110,80 +108,42 @@ def s_stem_sql(ref: str) -> str:
         f"ELSE {ref} END")
 
 
+# stem kind -> the operators/ module defining its plan-time Python
+# twin ``<kind>_stem(word)`` and its SQL generator
+# ``<kind>_stem_sql(ref, engine)``, imported on first use. Every one
+# of these expressions is expensive enough that the match renderer
+# binds ONE stemmed array per document instead of stemming per
+# query group; the S-stemmer ("s", defined above) is one CASE.
+_STEMMERS = {
+    "porter": "porter",
+    "german": "snowball_de",
+    "french": "snowball_fr",
+    "spanish": "snowball_es",
+    "italian": "snowball_it",
+    "portuguese": "snowball_pt",
+    "dutch": "snowball_nl",
+    "romanian": "snowball_ro",
+    "russian": "snowball_ru",
+    "finnish": "snowball_fi",
+    "hungarian": "snowball_hu",
+    "arabic": "snowball_ar",
+    "swedish": "snowball_scand",
+    "danish": "snowball_scand",
+    "norwegian": "snowball_scand",
+}
+
+
+def _stemmer_module(kind: str):
+    return importlib.import_module(
+        f"parquet_generator_spark.operators.{_STEMMERS[kind]}")
+
+
 def _stem_py(kind, w: str) -> str:
     if kind is None:
         return w
-    if kind == "porter":
-        return porter_stem(w)
-    if kind == "german":
-        from parquet_generator_spark.operators.snowball_de import (
-            german_stem,
-        )
-        return german_stem(w)
-    if kind == "french":
-        from parquet_generator_spark.operators.snowball_fr import (
-            french_stem,
-        )
-        return french_stem(w)
-    if kind == "spanish":
-        from parquet_generator_spark.operators.snowball_es import (
-            spanish_stem,
-        )
-        return spanish_stem(w)
-    if kind == "italian":
-        from parquet_generator_spark.operators.snowball_it import (
-            italian_stem,
-        )
-        return italian_stem(w)
-    if kind == "portuguese":
-        from parquet_generator_spark.operators.snowball_pt import (
-            portuguese_stem,
-        )
-        return portuguese_stem(w)
-    if kind == "dutch":
-        from parquet_generator_spark.operators.snowball_nl import (
-            dutch_stem,
-        )
-        return dutch_stem(w)
-    if kind == "romanian":
-        from parquet_generator_spark.operators.snowball_ro import (
-            romanian_stem,
-        )
-        return romanian_stem(w)
-    if kind == "russian":
-        from parquet_generator_spark.operators.snowball_ru import (
-            russian_stem,
-        )
-        return russian_stem(w)
-    if kind == "finnish":
-        from parquet_generator_spark.operators.snowball_fi import (
-            finnish_stem,
-        )
-        return finnish_stem(w)
-    if kind == "hungarian":
-        from parquet_generator_spark.operators.snowball_hu import (
-            hungarian_stem,
-        )
-        return hungarian_stem(w)
-    if kind == "arabic":
-        from parquet_generator_spark.operators.snowball_ar import (
-            arabic_stem,
-        )
-        return arabic_stem(w)
-    if kind in ("swedish", "danish", "norwegian"):
-        from parquet_generator_spark.operators import snowball_scand
-        return getattr(snowball_scand, f"{kind}_stem")(w)
-    return s_stem(w)
-
-
-# stemmers whose SQL expression is expensive enough that the match
-# renderer binds ONE stemmed array per document instead of stemming
-# per query group
-_EXPENSIVE_STEMMERS = ("porter", "german", "french", "spanish",
-                       "italian", "portuguese", "swedish",
-                       "danish", "norwegian", "dutch",
-                       "romanian", "russian", "finnish",
-                       "hungarian", "arabic")
+    if kind == "s":
+        return s_stem(w)
+    return getattr(_stemmer_module(kind), f"{kind}_stem")(w)
 
 
 def _stem_expr(kind, ref: str, engine: str) -> str:
@@ -192,68 +152,9 @@ def _stem_expr(kind, ref: str, engine: str) -> str:
     the full stemmers need per-engine binding syntax)."""
     if kind is None:
         return ref
-    if kind == "porter":
-        return porter_stem_sql(ref, engine)
-    if kind == "german":
-        from parquet_generator_spark.operators.snowball_de import (
-            german_stem_sql,
-        )
-        return german_stem_sql(ref, engine)
-    if kind == "french":
-        from parquet_generator_spark.operators.snowball_fr import (
-            french_stem_sql,
-        )
-        return french_stem_sql(ref, engine)
-    if kind == "spanish":
-        from parquet_generator_spark.operators.snowball_es import (
-            spanish_stem_sql,
-        )
-        return spanish_stem_sql(ref, engine)
-    if kind == "italian":
-        from parquet_generator_spark.operators.snowball_it import (
-            italian_stem_sql,
-        )
-        return italian_stem_sql(ref, engine)
-    if kind == "portuguese":
-        from parquet_generator_spark.operators.snowball_pt import (
-            portuguese_stem_sql,
-        )
-        return portuguese_stem_sql(ref, engine)
-    if kind == "dutch":
-        from parquet_generator_spark.operators.snowball_nl import (
-            dutch_stem_sql,
-        )
-        return dutch_stem_sql(ref, engine)
-    if kind == "romanian":
-        from parquet_generator_spark.operators.snowball_ro import (
-            romanian_stem_sql,
-        )
-        return romanian_stem_sql(ref, engine)
-    if kind == "russian":
-        from parquet_generator_spark.operators.snowball_ru import (
-            russian_stem_sql,
-        )
-        return russian_stem_sql(ref, engine)
-    if kind == "finnish":
-        from parquet_generator_spark.operators.snowball_fi import (
-            finnish_stem_sql,
-        )
-        return finnish_stem_sql(ref, engine)
-    if kind == "hungarian":
-        from parquet_generator_spark.operators.snowball_hu import (
-            hungarian_stem_sql,
-        )
-        return hungarian_stem_sql(ref, engine)
-    if kind == "arabic":
-        from parquet_generator_spark.operators.snowball_ar import (
-            arabic_stem_sql,
-        )
-        return arabic_stem_sql(ref, engine)
-    if kind in ("swedish", "danish", "norwegian"):
-        from parquet_generator_spark.operators import snowball_scand
-        return getattr(snowball_scand,
-                       f"{kind}_stem_sql")(ref, engine)
-    return s_stem_sql(ref)
+    if kind == "s":
+        return s_stem_sql(ref)
+    return getattr(_stemmer_module(kind), f"{kind}_stem_sql")(ref, engine)
 
 
 @dataclass(frozen=True)
@@ -264,8 +165,14 @@ class Analyzer:
     stopwords: frozenset = frozenset()
     synonyms: dict = field(default_factory=dict)  # token -> [token...]
     stem: bool = False
-    stemmer: str = "s"  # s | porter | german | french | spanish
+    stemmer: str = "s"  # "s" or a key of _STEMMERS
     charset: str = _CHARSET  # token alphabet (regex class body)
+
+    def __post_init__(self):
+        if self.stemmer != "s" and self.stemmer not in _STEMMERS:
+            raise ValueError(
+                f"unknown stemmer {self.stemmer!r}; known: "
+                f"{['s', *_STEMMERS]}")
 
     @property
     def stem_kind(self):
@@ -528,15 +435,11 @@ register_analyzer(Analyzer("arabic",
                            charset=ARABIC_CHARSET))
 
 
-def _quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def _group_pred_sql(group: list[str], kind, engine: str) -> str:
     """EXISTS-style test: any element of the tokenized field, after
     stemming, equals any group member."""
     elem = _stem_expr(kind, "t", engine)
-    lits = ", ".join(_quote(g) for g in group)
+    lits = quote_list(group)
     return f"t -> ({elem}) IN ({lits})"
 
 
@@ -640,8 +543,7 @@ def _prefix_guarded_stem(kind, ref: str, engine: str,
     stems = [g for grp in groups for g in grp]
     if not stems or any(len(g) < 3 for g in stems):
         return stem
-    lits = ", ".join(_quote(g[:2]) for g in sorted({g[:2]
-                                                    for g in stems}))
+    lits = quote_list(sorted({g[:2] for g in stems}))
     probe = ref
     if kind == "italian":
         probe = f"translate({ref}, 'áéíóú', 'àèìòù')"
@@ -667,18 +569,18 @@ def _stemmed_match_sql(col: str, groups: list[list[str]], kind,
         stemmed = (f"transform({_spark_tokens_expr(col, sep)}, "
                    f"t -> {stem})")
         hits = [
-            f"exists(S, e -> e IN ({', '.join(_quote(g) for g in grp)}))"
+            f"exists(S, e -> e IN ({quote_list(grp)}))"
             for grp in groups]
         body = _match_algebra_sql(hits, operator, minimum_should_match)
-        return f"element_at(transform(array({stemmed}), S -> {body}), 1)"
+        return let(engine, stemmed, "S", body)
     stemmed = (f"list_transform({_duck_tokens_expr(col, sep)}, "
                f"t -> {stem})")
     hits = [
         f"len(list_filter(S, e -> e IN "
-        f"({', '.join(_quote(g) for g in grp)}))) > 0"
+        f"({quote_list(grp)}))) > 0"
         for grp in groups]
     body = _match_algebra_sql(hits, operator, minimum_should_match)
-    return f"(list_transform([{stemmed}], S -> {body}))[1]"
+    return let(engine, stemmed, "S", body)
 
 
 def analyzed_match(col: str, query: str, analyzer: Analyzer,
@@ -694,7 +596,7 @@ def analyzed_match(col: str, query: str, analyzer: Analyzer,
     if (minimum_should_match is not None
             and int(minimum_should_match) > len(groups)):
         return F.lit(False)
-    if analyzer.stem_kind in _EXPENSIVE_STEMMERS:
+    if analyzer.stem_kind in _STEMMERS:
         # stem once per document, not once per group (the full
         # stemmer expressions are ~100x the S-stemmer's CASE)
         return F.expr(_stemmed_match_sql(
@@ -736,7 +638,7 @@ def analyzed_match_duck_sql(col: str, query: str, analyzer: Analyzer,
     if (minimum_should_match is not None
             and int(minimum_should_match) > len(groups)):
         return "FALSE"
-    if analyzer.stem_kind in _EXPENSIVE_STEMMERS:
+    if analyzer.stem_kind in _STEMMERS:
         return _stemmed_match_sql(
             col, groups, analyzer.stem_kind, "duck", operator,
             minimum_should_match, analyzer.sep)
@@ -780,7 +682,7 @@ def _phrase_lambda(groups: list[list[str]], elem_at) -> str:
     element_at — bare [] is 0-based there; DuckDB [] is 1-based)."""
     conds = []
     for j, g in enumerate(groups):
-        lits = ", ".join(_quote(x) for x in g)
+        lits = quote_list(g)
         conds.append(f"{elem_at(j)} IN ({lits})")
     return "i -> (" + " AND ".join(conds) + ")"
 
@@ -823,7 +725,7 @@ def analyzed_match_phrase_duck_sql(col: str, phrase: str,
     lam = _phrase_lambda(groups, lambda j: f"S[i + {j}]")
     body = (f"(len(S) >= {k} AND len(list_filter("
             f"generate_series(1, len(S) - {k} + 1), {lam})) > 0)")
-    return f"(list_transform([{stemmed}], S -> {body}))[1]"
+    return let("duck", stemmed, "S", body)
 
 
 # ------------------------------------------------------------------
@@ -869,10 +771,10 @@ def _stored_hits(stored_col: str, groups: list[list[str]],
                  engine: str) -> list[str]:
     if engine == "spark":
         return [f"exists({stored_col}, e -> e IN "
-                f"({', '.join(_quote(g) for g in grp)}))"
+                f"({quote_list(grp)}))"
                 for grp in groups]
     return [f"len(list_filter({stored_col}, e -> e IN "
-            f"({', '.join(_quote(g) for g in grp)}))) > 0"
+            f"({quote_list(grp)}))) > 0"
             for grp in groups]
 
 

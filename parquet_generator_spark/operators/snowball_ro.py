@@ -58,6 +58,16 @@ parity is pinned three ways in tests/test_snowball_ro.py
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    Frag,
+    fold,
+    r1,
+    r2,
+    render,
+    romance_rv,
+    struct,
+)
+
 # true vowels (i and u go through the marking pass)
 _TRUE_VOWELS = "aăâeîo"
 _S1_ROUNDS = 2
@@ -322,60 +332,14 @@ def romanian_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
+_SET = "'1'"   # the raised f flag
 
 
-_FIELDS = ("w", "c", "rv", "r1", "r2", "f")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, c, rv, r1, r2, f) struct."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.c = f"{x}.w", f"{x}.c"
-        self.rv, self.r1, self.r2 = f"{x}.rv", f"{x}.r1", f"{x}.r2"
-        self.f = f"{x}.f"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "",
-            f: str | None = None) -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        c = f"substr({self.c}, 1, {self.ln} - {n})"
-        if rep:
-            w = f"{w} || '{rep}'"
-            c = f"{c} || '{_cvof(rep)}'"
-        return _st(self.engine, w=w, c=c, rv=self.rv, r1=self.r1,
-                   r2=self.r2, f=self.f if f is None else f)
-
-    def keep(self, f: str | None = None) -> str:
-        return _st(self.engine, w=self.w, c=self.c, rv=self.rv,
-                   r1=self.r1, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.rv}"
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
+    fields = ("w", "c", "rv", "r1", "r2", "f")
+    rep_cv = staticmethod(_cvof)
 
 
 def _unmarked_sql(x: _Frag, s: str) -> list:
@@ -403,7 +367,7 @@ def _s0_sql(x: _Frag) -> str:
         else:
             guard = x.in_r1(n)
         arm = (f"CASE WHEN {guard} "
-               f"THEN {x.cut(n, rep or '', f=chr(39) + '1' + chr(39))} "
+               f"THEN {x.cut(n, rep or '', f=_SET)} "
                f"ELSE {x.keep()} END")
         whens.append(f"WHEN {match} THEN ({arm})")
     return "CASE " + " ".join(whens) + f" ELSE {x.keep()} END"
@@ -414,7 +378,7 @@ def _s1_sql(x: _Frag) -> str:
     for s, rep in sorted(_STEP1, key=lambda t: len(t[0]),
                          reverse=True):
         n = len(s)
-        cut1 = x.cut(n, rep, f="'1'")
+        cut1 = x.cut(n, rep, f=_SET)
         arm = (f"CASE WHEN {x.in_r1(n)} THEN {cut1} "
                f"ELSE {x.keep()} END")
         whens.append(f"WHEN {x.ends(s)} THEN ({arm})")
@@ -436,11 +400,11 @@ def _s2_sql(x: _Frag) -> str:
             tz = (f"{x.ln} - {n} >= 1 AND "
                   f"substr({x.w}, {x.ln} - {n}, 1) = 'ţ'")
             arm = (f"CASE WHEN {x.in_r2(n)} AND {tz} "
-                   f"THEN {x.cut(n + 1, 't', f=chr(39) + '1' + chr(39))} "
+                   f"THEN {x.cut(n + 1, 't', f=_SET)} "
                    f"ELSE {x.keep()} END")
         else:
             arm = (f"CASE WHEN {x.in_r2(n)} "
-                   f"THEN {x.cut(n, rep, f=chr(39) + '1' + chr(39))} "
+                   f"THEN {x.cut(n, rep, f=_SET)} "
                    f"ELSE {x.keep()} END")
         whens.append(f"WHEN {match} THEN ({arm})")
     return "CASE " + " ".join(whens) + f" ELSE {x.keep()} END"
@@ -490,51 +454,19 @@ def romanian_stem_sql(ref: str, engine: str) -> str:
     over a carried (w, c, rv, r1, r2, f) struct, with step 1
     unrolled ``_S1_ROUNDS`` times (each successful round strips
     >= 2 chars, so the unroll covers any real token)."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     cons = "".join(ch for ch in
                    "bcdfghjklmnpqrstvwxyz0123456789şţ"
                    if ch not in _TRUE_VOWELS)
-    k = (f"translate(translate(translate(g0, '{_TRUE_VOWELS}', "
-         f"'{'a' * len(_TRUE_VOWELS)}'), 'iu', 'ii'), "
-         f"'{cons}', '{'b' * len(cons)}')")
+    k = fold(fold(fold("g0", _TRUE_VOWELS, "a"), "iu", "i"), cons, "b")
     marked = "k0"
     for _ in range(_MARK_ROUNDS):
         for pat, rep in _MARK_PATTERNS:
             marked = f"replace({marked}, '{pat}', '{rep}')"
     marked = f"replace({marked}, 'i', 'a')"
-
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
-    ln = "length(g1.w)"
-    j1 = "instr(substr(g1.c, 3), 'a')"
-    j2 = "instr(substr(g1.c, 3), 'b')"
-    rv = (f"CASE WHEN {ln} < 3 THEN {ln} + 1 "
-          f"WHEN substr(g1.c, 2, 1) = 'b' THEN "
-          f"(CASE WHEN {j1} = 0 THEN {ln} + 1 ELSE {j1} + 3 END) "
-          f"WHEN left(g1.c, 2) = 'aa' THEN "
-          f"(CASE WHEN {j2} = 0 THEN {ln} + 1 ELSE {j2} + 3 END) "
-          f"ELSE 4 END")
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r1 = f"CASE WHEN {p1} = 0 THEN {ln} + 1 ELSE {p1} + 2 END"
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", c="g1.c", rv=rv, r1=r1, r2=r2,
-               f="'0'")
-
+    seed = struct(engine, w="g1.w", c="g1.c", rv=romance_rv(), r1=r1(),
+                  r2=r2(), f="'0'")
     steps = ([_s0_sql] + [_s1_sql] * _S1_ROUNDS
              + [_s2_sql, _s3_sql, _s4_sql])
-    last = _Frag(engine, f"x{len(steps)}")
-    body = last.w
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", marked), "g1", body)
-    body = _let(engine, k, "k0", body)
-    return _let(engine, ref, "g0", body)
+    return render(engine, _Frag, seed, steps, lambda x: x.w,
+                  [("g0", ref), ("k0", k),
+                   ("g1", struct(engine, w="g0", c=marked))])

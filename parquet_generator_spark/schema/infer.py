@@ -133,8 +133,10 @@ def promote_nullable(dt: T.DataType) -> T.DataType:
 
 def lenient_decode(col: Column, schema: T.StructType) -> Column:
     """Decode a JSON string column against ``schema`` leniently:
-    missing fields -> null, type mismatches -> null (PERMISSIVE),
-    extra fields dropped. The Spark-native ExtendedJsonDecoder
-    (decode/ExtendedJsonDecoder.java): one JVM-side expression,
-    no Python in the loop."""
-    return F.from_json(col, schema, {"mode": "PERMISSIVE"})
+    missing fields -> null, type mismatches -> null (PERMISSIVE,
+    from_json's default mode), extra fields dropped. The Spark-native
+    ExtendedJsonDecoder (decode/ExtendedJsonDecoder.java): one
+    JVM-side expression, no Python in the loop. Passing no options
+    lets the optimizer prune the decoded schema to the fields a
+    filter or projection reads."""
+    return F.from_json(col, schema)

@@ -106,6 +106,12 @@ def test_unknown_analyzer_is_a_loud_error():
             "query": "x", "analyzer": "nope"}}})
 
 
+def test_unknown_stemmer_is_a_loud_error():
+    """A misspelled stemmer used to fall through to the S-stemmer."""
+    with pytest.raises(ValueError, match="unknown stemmer"):
+        Analyzer("typo", stem=True, stemmer="sweedish")
+
+
 def test_custom_analyzer_registration_roundtrip():
     a = Analyzer("tiny", stopwords=frozenset({"el"}),
                  synonyms={"auto": ["car"]}, stem=True)

@@ -9,6 +9,7 @@ from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from parquet_generator_spark.etl import (
     dated_parquet_to_parquet,
@@ -20,7 +21,11 @@ from parquet_generator_spark.sources.dated import (
     parse_dated_name,
     recent_n_days,
 )
-from parquet_generator_spark.sources.es_source import read_json_fixture
+from parquet_generator_spark.operators.esdsl import match_phrase
+from parquet_generator_spark.sources.es_source import (
+    decode_docs,
+    read_json_fixture,
+)
 from parquet_generator_spark.schema.infer import infer_json_schema
 
 REF_DIR = "/root/reference/office365_signin"
@@ -111,3 +116,26 @@ def test_fixture_reader_lenient_decode(spark, tmp_path):
     # missing fields decode to null, never error (ExtendedJsonDecoder
     # behavior)
     assert (2, None, None) in rows and (None, "y", True) in rows
+
+
+def test_decode_filter_prunes_from_json_to_read_fields(spark):
+    """The filter decodes only the field it reads: an explicit
+    from_json option (even the default mode) blocks that pruning, so
+    the filter decoded the full schema a second time."""
+    schema = T.StructType([T.StructField(n, t) for n, t in (
+        ("rule_name", T.StringType()), ("sev", T.LongType()),
+        ("msg", T.StringType()))])
+    df = spark.createDataFrame(
+        [('{"rule_name": "login anomaly", "sev": 3}', "2024-01-01"),
+         ('{"rule_name": "port scan", "msg": "x"}', "2024-01-02")],
+        "doc string, source_date string")
+    out = decode_docs(df, "doc", schema).filter(
+        match_phrase("rule_name", "login anomaly"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln for ln in plan.splitlines() if "Filter " in ln]
+    assert len(filters) == 1 and "from_json(" in filters[0], plan
+    assert "StructField(rule_name," in filters[0]
+    assert "StructField(sev," not in filters[0]
+    assert "StructField(msg," not in filters[0]
+    assert [tuple(r) for r in out.collect()] == [
+        ("2024-01-01", "login anomaly", 3, None)]

@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from parquet_generator_spark.operators.porter import (
+    _cvof,
     cv_form,
     porter_stem,
     porter_stem_sql,
@@ -96,6 +97,14 @@ def _duck_stem(con, w: str) -> str:
     sql = porter_stem_sql("w", "duck")
     return con.execute(f"SELECT {sql} FROM (SELECT ? AS w)",
                        [w]).fetchone()[0]
+
+
+def test_cvof_rejects_y_in_replacement():
+    """A replacement's skeleton is fixed only when it holds no y
+    (whose class depends on its neighbor)."""
+    assert _cvof("ate") == "aba"
+    with pytest.raises(ValueError, match="contains y"):
+        _cvof("ify")
 
 
 def test_duckdb_matches_python_on_vectors(duck):
