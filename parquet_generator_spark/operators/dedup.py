@@ -62,6 +62,7 @@ def _drop_hot_buckets(bands: DataFrame, keys: list[str],
     hot = (bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
            .filter(F.col("n") > bucket_cap)
            .transform(_cache.lazy))  # materialized by the count below
+    # stays eager: Python decides whether to log and anti-join
     n_hot = hot.count()
     if n_hot:
         worst = hot.agg(F.max("n")).collect()[0][0]
@@ -349,6 +350,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id"))
               .transform(_cache.lazy))  # materialized by the agg below
+    # the label sums stay eager: the Python loop tests convergence
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
     for _ in range(max_iter):
@@ -418,6 +420,7 @@ def connected_components_star(pairs: DataFrame,
     for _ in range(max_iter):
         edges = star(star(edges, large=True), large=False) \
             .localCheckpoint().transform(_cache.track)
+        # stays eager: the Python loop tests convergence on it
         sig = edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(u, v))").alias("h")).collect()[0]
@@ -788,7 +791,8 @@ def containment_pairs(df: DataFrame, id_col: str, content_col: str,
               .select("id", "s", "dfq")
               .transform(_cache.lazy))  # tiny; reused for hot-count + join (lazy: the cap agg below materializes it)
     if shingle_df_cap is not None:
-        # one bounded-scalar job over the (tiny, checkpointed) prefix
+        # one bounded-scalar job over the (tiny, checkpointed) prefix;
+        # stays eager because Python decides whether to log and prune
         n_hot, worst = prefix.agg(
             F.count(F.when(F.col("dfq") > shingle_df_cap, 1)),
             F.max(F.when(F.col("dfq") > shingle_df_cap,

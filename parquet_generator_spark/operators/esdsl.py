@@ -2467,9 +2467,9 @@ def search(df: DataFrame, body: dict) -> DataFrame:
         # histogram). Simplification vs ES: calendar units only
         # (minute/hour/day/week/month/year), no 5m/30m/3h subdivides.
         # The choice needs the data's time bounds — a one-row scalar
-        # aggregate (eager, the repo's blessed scalar pattern); the
-        # span arithmetic below is mirrored verbatim in oracle SQL so
-        # both engines pick the same unit.
+        # aggregate that stays eager because Python picks the unit
+        # from it; the span arithmetic below is mirrored verbatim in
+        # oracle SQL so both engines pick the same unit.
         target = int(abody.get("buckets", 10))
         field = abody["field"]
         lo, hi = filtered.agg(F.min(field), F.max(field)).first()

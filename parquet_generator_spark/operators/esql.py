@@ -1850,8 +1850,8 @@ def _df_apply(df: DataFrame, commands: list,
             totals = df.agg(F.sum(val).alias("_total"),
                             F.count(F.lit(1)).alias("_nb"))
             # ordered window over the STATS-bucketed frame only
-            # (bounded by the parse-time contract); totals enter as
-            # plan literals (broadcast_scalars — no nested-loop join)
+            # (bounded by the parse-time contract); totals attach as
+            # a scalar subquery (broadcast_scalars — no nested-loop join)
             w = (Window.orderBy(key)
                  .rowsBetween(Window.unboundedPreceding, 0))
             pre = (broadcast_scalars(df, totals)
@@ -2041,12 +2041,10 @@ def _df_apply(df: DataFrame, commands: list,
                     .agg(F.max("_bscore").alias("_bscore")))
                 if normalizer == "minmax":
                     # minmax via a single-partition window over the
-                    # branch frame (round 14): the former eager
-                    # broadcast_scalars collect was one extra job
-                    # per branch at plan-build time. The window
-                    # input is the branch's already-LIMITed rows
-                    # (<= the rerank-window cap), never the corpus,
-                    # so the single partition is bounded.
+                    # branch frame, sharing the branch's one scan.
+                    # The window input is the branch's already-
+                    # LIMITed rows (<= the rerank-window cap), never
+                    # the corpus, so the single partition is bounded.
                     from pyspark.sql import Window as _W
 
                     _w = _W.partitionBy()

@@ -43,7 +43,9 @@ def pagerank(pairs: DataFrame, iters: int = 3,
              .repartition("u")
              .localCheckpoint().transform(_cache.track))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    n = deg.count()  # bounded scalar: node count
+    # stays eager: Python branches on the node count and seeds the
+    # rank column from it
+    n = deg.count()
     if n == 0:
         return pairs.select(F.col("id_a").alias("id"),
                             F.lit(0.0).alias("rank")).limit(0)

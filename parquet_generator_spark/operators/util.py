@@ -23,26 +23,18 @@ def widen_if_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 
 def broadcast_scalars(df: DataFrame, scalars: DataFrame) -> DataFrame:
-    """Attach the columns of a ONE-ROW aggregate to every row of
-    ``df`` — the scalar-subquery decorrelation pattern (corpus total,
-    global max, ...).
+    """Attach the columns of ``scalars`` to every row of ``df`` (corpus
+    total, global max, percentile array, ...).
 
-    The one-row frame is evaluated eagerly (a bounded scalar
-    collect, like every other scalar aggregate in this repo) and its
-    values enter the main plan as LITERALS shipped with the task
-    closure. This beats the two plan-side alternatives: an
-    empty-partition-spec window funnels the input through one
-    partition, and crossJoin(broadcast(one_row)) compiles to
-    BroadcastNestedLoopJoin — indistinguishable in plan text from a
-    real pairwise explosion, which would blind the tripwire tests
-    that assert no nested-loop join appears anywhere. (A constant-key
-    equi-join doesn't survive either: Catalyst constant-folds the key
-    and rewrites it back to a nested-loop cross join.)
+    ``scalars`` must be a one-row (global, ungrouped) aggregate. It
+    enters the plan as ONE lazy scalar subquery over a struct of its
+    columns, expanded by name in the next projection, so building the
+    plan runs no Spark job and ``explain()`` stays side-effect free. A
+    frame with more than one row fails at execution.
     """
     from pyspark.sql import functions as F
 
-    row = scalars.first()
-    if row is None:
-        raise ValueError("scalar frame produced no row")
-    return df.select(
-        "*", *[F.lit(v).alias(c) for c, v in row.asDict().items()])
+    s = "__scalars"
+    sub = scalars.select(F.struct("*")).scalar()
+    return (df.select("*", sub.alias(s))
+            .select("*", f"{s}.*").drop(s))

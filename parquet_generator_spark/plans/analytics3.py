@@ -211,8 +211,8 @@ WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 flavor: per nation, customers with above-average
     positive balance and no orders at all. The global average is a
-    one-row aggregate attached as a plan literal (computed once, not
-    a correlated subquery); the no-orders test is a left-anti join."""
+    one-row aggregate attached as an uncorrelated scalar subquery
+    (computed once); the no-orders test is a left-anti join."""
     cust = load_table(spark, "customer", sf_dir)
     orders = load_table(spark, "orders", sf_dir)
     avg_bal = (cust.filter(F.col("c_acctbal") > 0.0)

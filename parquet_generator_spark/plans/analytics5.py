@@ -242,7 +242,7 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution of week 1 vs the rest of the month over fixed-width
     bins, Laplace-smoothed so empty bins stay finite. Two conditional
     counts in ONE grouped pass (no second scan); totals attach as
-    plan literals. psi_i = (p_i - q_i) * ln(p_i / q_i); sum > 0.2 is
+    one scalar subquery. psi_i = (p_i - q_i) * ln(p_i / q_i); sum > 0.2 is
     the conventional 'drifted' alarm."""
     from parquet_generator_spark.operators.util import broadcast_scalars
     ev = load_table(spark, "events", sf_dir)
@@ -435,7 +435,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation: per-user recency (days since last
     event vs the corpus max date), frequency, and monetary total,
     each scored 1-5 against quintile boundaries computed over the
-    user frame and attached as plan literals. Monetary sums are
+    user frame and attached as a scalar subquery. Monetary sums are
     rounded BEFORE the boundary comparison so engine fold-order ulps
     cannot flip a user across a quintile edge. Output: segment-cell
     counts."""

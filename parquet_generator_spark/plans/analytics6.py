@@ -53,7 +53,7 @@ def _basket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NULL-keyed marker/item rows described above. The result is
     the aggregated model table (distinct items + distinct
     co-occurring pairs + 1 row), bounded far below the corpus —
-    checkpointed so the scalar collect, the frequency lookups and
+    checkpointed so the scalar subquery, the frequency lookups and
     the pair branch all read it without re-running the scan."""
     baskets = (load_table(spark, "lineitem", sf_dir)
                .groupBy(F.col("l_orderkey").alias("okey"))
@@ -63,11 +63,9 @@ def _basket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy(F.col("r.a").alias("item_a"),
                        F.col("r.b").alias("item_b"))
               .agg(F.count(F.lit(1)).alias("cnt")))
-    # EAGER: the first consumer is broadcast_scalars' partial
-    # first()/take(1) on the marker row — the lazy-barrier rule
-    # (operators/cache.py) keeps eager=True when the first consumer
-    # is partial, so materialization is never split across the
-    # take(1) job's partition subset (r13 ADVICE).
+    # EAGER: the basket-count scalar subquery and the main query
+    # run as separate jobs that both read the model; materializing
+    # it up front computes it once before either starts.
     return cache.checkpoint(counts)
 
 

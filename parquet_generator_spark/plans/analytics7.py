@@ -6,7 +6,7 @@
 - ``pareto_cumshare``: revenue concentration by customer decile
   (the 80/20 audit). Deciles are assigned by comparing against the
   nine exact revenue percentiles — computed once and attached as
-  literals — NOT by a global sort/ntile over the customer frame, so
+  a scalar subquery — NOT by a global sort/ntile over the customer frame, so
   the plan stays scale-safe (a billion customers shuffle once for
   the per-customer aggregate and once for the 10-bucket groupBy;
   nothing orders the full frame).
@@ -42,7 +42,7 @@ def benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution (obs-exp)^2/exp. The digit is pure arithmetic
     (value / 10^floor(log10 value)) — no string casts in the hot
     path; one 9-bucket groupBy; the corpus total attaches as a
-    literal (scalar-subquery pattern)."""
+    scalar subquery."""
     o = load_table(spark, "orders", sf_dir)
     digit = F.floor(
         F.col("o_totalprice")
@@ -96,7 +96,7 @@ _PCTS = [round(0.1 * i, 1) for i in range(1, 10)]  # 0.1 .. 0.9
 def pareto_cumshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration by customer decile: per-customer revenue
     -> decile assignment against the nine EXACT percentiles (attached
-    as literals, strict '>' so ties stay in the lower decile) ->
+    as a scalar subquery, strict '>' so ties stay in the lower decile) ->
     per-decile customer count, revenue, share, and the cumulative
     share from the TOP decile down (the Pareto curve: cum_share at
     decile 9 = the top-10%% share). The cumulative window runs over

@@ -3,7 +3,7 @@ batch-over-batch n-gram novelty, tokenizer fertility, source-mixture
 Gini inequality, and SimHash signature bit-balance QA.
 
 Scale posture: one (doc,token)- or hash-keyed shuffle each; scalar
-totals attach as plan literals (broadcast_scalars); nothing touches
+totals attach as scalar subqueries (broadcast_scalars); nothing touches
 the driver beyond bounded group-cardinality rows.
 """
 
@@ -137,25 +137,20 @@ def gini_source_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy(F.lit(1)).orderBy("tokens", "source")
     # the ranked frame is SOURCE-cardinality (a handful of rows) and
     # feeds the totals aggregate AND the output — checkpoint it so
-    # the corpus groupBy runs once (round 14: the former nested
-    # broadcast_scalars re-ran the tokenize+groupBy for the gini
-    # collect, the total collect and the final output — three
-    # corpus passes and three jobs; now one pass, one scalar
-    # collect). Lazy: the first consumer is the full-scan totals
-    # aggregate.
+    # the corpus groupBy runs once. Lazy: the first consumer is the
+    # full-scan totals aggregate.
     ranked = cache.lazy(per.withColumn("rk", F.row_number().over(w)))
     tot = ranked.agg(
         F.sum("tokens").alias("t"),
         F.count(F.lit(1)).alias("k"),
-        F.sum(F.col("rk") * F.col("tokens")).alias("rt")).first()
-    t, k, rt = F.lit(tot["t"]), F.lit(tot["k"]), F.lit(tot["rt"])
-    # Gini = (2*sum(rank_i * x_i)) / (k * sum(x)) - (k+1)/k —
-    # the identical expression over literals (constant-folded with
-    # the same JVM arithmetic the column form used)
+        F.sum(F.col("rk") * F.col("tokens")).alias("rt"))
+    t, k, rt = F.col("t"), F.col("k"), F.col("rt")
+    # Gini = (2*sum(rank_i * x_i)) / (k * sum(x)) - (k+1)/k
     gini = F.round((2.0 * rt) / (k * t) - (k + 1.0) / k, 4)
-    return (ranked.select("source", "tokens",
-                          F.round(F.col("tokens") / t, 4)
-                          .alias("share"), gini.alias("gini"))
+    return (broadcast_scalars(ranked, tot)
+            .select("source", "tokens",
+                    F.round(F.col("tokens") / t, 4).alias("share"),
+                    gini.alias("gini"))
             .orderBy("source"))
 
 

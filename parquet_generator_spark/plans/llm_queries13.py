@@ -34,7 +34,8 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt(H(cell) * H(label)), in bits). Cell = nearest of the
     smallest-id coarse centroids (the oracle-reproducible quantizer
     ann_ivf uses); every statistic reduces the bounded contingency
-    table, with the total as a plan literal."""
+    table. The total is one collect over the checkpointed table;
+    the purity and entropy scalars attach as scalar subqueries."""
     emb = load_table(spark, "embeddings", sf_dir)
     cents = similarity.make_centroids_from_corpus(emb, PURITY_CELLS)
     assign = (similarity.ivf_assign_cells(emb, cents, 1)

@@ -251,6 +251,7 @@ def knn_classify_ivf(spark: SparkSession, sf_dir: str,
     # gate SFs (500-row embeddings -> sqrt < 32 -> floor wins); at
     # true corpus scale the sqrt(n) centroid table is built by
     # sampled k-means and broadcast, not collected row-by-row.
+    # stays eager: Python sizes the centroid table from the count
     n = emb.count()
     n_cells = max(ANN_IVF_CELLS, int(n ** 0.5))
     cents = make_centroids_from_corpus(emb, n_cells)

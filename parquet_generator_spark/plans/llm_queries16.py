@@ -626,7 +626,7 @@ KW_TOPK = 3
 def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document keyword extraction: top-3 terms by TF-IDF
     (tf * ln(N/df)). Two grouped passes build tf and df; the scalar
-    doc count enters as a plan literal; scores are ROUNDED TO 4
+    doc count attaches as a scalar subquery; scores are ROUNDED TO 4
     BEFORE ranking so the rank window (partitioned per doc — fully
     parallel) breaks ties on the term, immune to cross-engine ln()
     last-ulp differences."""

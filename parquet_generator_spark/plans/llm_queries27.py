@@ -163,7 +163,7 @@ def dsir_importance_weights(spark: SparkSession,
 
     Scale: ONE token explode feeds both the B-row distribution agg
     and the scoring join; the distribution frame is 128 rows and
-    BROADCAST, totals enter as plan literals (broadcast_scalars),
+    BROADCAST, totals attach as a scalar subquery (broadcast_scalars),
     so the only wide shuffle is the per-doc rollup — the same
     two-pass shape DSIR runs over its full corpus."""
     from parquet_generator_spark.operators.util import (

@@ -209,7 +209,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding QA: flag vectors whose L2 norm sits more than 3
     sample standard deviations from the corpus mean (broken encoder
     output, zero vectors, scale drift). The mean/stddev are a
-    one-row aggregate attached as plan literals (broadcast_scalars)
+    one-row aggregate attached as a scalar subquery (broadcast_scalars)
     — the same scalar-decorrelation pattern the analytics surface
     uses; the norm itself is the sequential JVM fold, bit-identical
     to DuckDB's list_dot_product."""

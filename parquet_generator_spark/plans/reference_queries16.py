@@ -808,7 +808,7 @@ def dsl_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     step statistic; ES's ML version adds p-values — DOCUMENTED
     DIVERGENCE: we emit the argmax split and step size). All
     second-pass arithmetic on the bucket-cardinality frame: prefix
-    sums via the ordered bucket window, totals as plan literals, one
+    sums via the ordered bucket window, totals as a scalar subquery, one
     TakeOrdered(1) for the argmax."""
     from pyspark.sql import Window
 

@@ -34,9 +34,8 @@ ORACLES: dict = {}
 def dsl_parent_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES `parent_id` query: children of ONE named parent — here the
     smallest existing order key so the query returns rows at every
-    SF (ES callers pass a literal id; the min is resolved to a
-    literal via the scalar-subquery pattern, then the child filter
-    pushes down to the lineitem scan)."""
+    SF (ES callers pass a literal id; here the min attaches as a
+    scalar subquery and the child filter compares against it)."""
     li = load_table(spark, "lineitem", sf_dir)
     target = li.agg(F.min("l_orderkey").alias("pid"))
     kids = broadcast_scalars(li, target)

@@ -400,14 +400,12 @@ def dsl_retriever_linear(spark: SparkSession,
     weight x (s - min) / (max - min) within each leg's
     rank_window_size, a missing leg contributing 0. Each leg stays
     a bounded TakeOrderedAndProject; the minmax scalars come from a
-    single-partition WINDOW over the <= window-row leg (round 14:
-    the former eager broadcast_scalars collect re-ran each leg's
-    corpus scan once for min/max and again for the output — two
-    extra build-time jobs per query; the window shares the leg's
-    one scan, same shape as the oracle's ``max(s) OVER ()``). The
-    window input is the LIMITed leg, never the corpus, so nothing
-    data-scale funnels through the single partition; the fusion is
-    a full-outer join of two <= window frames."""
+    single-partition WINDOW over the <= window-row leg (the window
+    shares the leg's one scan, same shape as the oracle's
+    ``max(s) OVER ()``). The window input is the LIMITed leg, never
+    the corpus, so nothing data-scale funnels through the single
+    partition; the fusion is a full-outer join of two <= window
+    frames."""
     import math
 
     from pyspark.sql.window import Window

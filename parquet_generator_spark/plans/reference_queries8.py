@@ -7,7 +7,7 @@ over a bounded sample), `filters` with `other_bucket`, and
 Scale posture: pipeline aggs operate over the BUCKET frame (bounded
 by the calendar span, never data-cardinality); the sampler's sample
 is TakeOrderedAndProject (per-partition top-k + k-row driver merge);
-bucket min/max scalars attach as plan literals, no global windows.
+bucket min/max scalars attach as a scalar subquery, no global windows.
 """
 
 from __future__ import annotations

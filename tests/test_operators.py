@@ -30,6 +30,38 @@ def test_exact_dedup_removes_copies(spark):
     assert groups == {1: 3, 2: 1}
 
 
+def test_broadcast_scalars_is_a_lazy_one_row_subquery(spark):
+    """broadcast_scalars attaches a one-row aggregate without running
+    it: attaching starts no job, the attached values equal the
+    aggregate computed directly, and a frame with more than one row
+    fails at collect() instead of silently attaching its first row."""
+    from parquet_generator_spark.operators.util import broadcast_scalars
+
+    sc = spark.sparkContext
+    li = load_table(spark, "lineitem", SF).select("l_orderkey",
+                                                  "l_quantity")
+    stats = li.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max("l_orderkey").alias("mx"),
+        F.expr("percentile(l_quantity, array(0.5D, 0.9D))").alias("pct"))
+    group = "broadcast_scalars:attach"
+    sc.setJobGroup(group, group)
+    try:
+        out = broadcast_scalars(li, stats)
+        two = broadcast_scalars(li, li.select(F.lit(1).alias("k"))
+                                .limit(2))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+    assert out.columns == ["l_orderkey", "l_quantity", "n", "mx", "pct"]
+    attached = out.select("n", "mx", "pct").distinct().collect()
+    assert [r.asDict() for r in attached] == [stats.first().asDict()]
+    with pytest.raises(Exception, match="SCALAR_SUBQUERY_TOO_MANY_ROWS"):
+        two.collect()
+
+
 def test_minhash_recall_equals_exact(spark):
     docs = load_table(spark, "documents", SF)
     exact = {(r["id_a"], r["id_b"])

@@ -334,7 +334,7 @@ def test_no_empty_partition_windows_in_source():
     """Tripwire for the scalar-aggregate-as-global-window
     anti-pattern: ``Window.partitionBy()`` (empty spec) funnels its
     whole input through one partition. Corpus-scale uses were
-    converted to eager one-row scalar attachment (broadcast_scalars).
+    converted to one-row scalar attachment (broadcast_scalars).
 
     Allowlisted sites (round 14): windows whose input is ALREADY
     LIMITed to the rank-window cap (retriever/fusion legs, <= 40
@@ -362,12 +362,48 @@ def test_no_empty_partition_windows_in_source():
                                   "dsl_significant_terms",
                                   "embedding_norm_outliers"])
 def test_scalar_literal_queries_have_no_nested_loop(spark, name):
-    """Queries whose corpus-wide scalars are attached as plan
-    literals (broadcast_scalars) must stay free of the nested-loop
+    """Queries whose corpus-wide scalars are attached as a scalar
+    subquery (broadcast_scalars) must stay free of the nested-loop
     join a crossJoin(broadcast(one_row)) would reintroduce."""
     plan = formatted_plan(spark, name)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+# keys whose only build-time Spark actions were eager scalar collects
+# (broadcast_scalars' former first()); with every corpus-wide scalar
+# attached as a lazy subquery, building them runs no job at all
+SCALAR_ATTACH_KEYS = [
+    "q15_top_supplier", "q22_idle_customers", "drift_psi",
+    "rfm_segmentation", "benford_digits", "pareto_cumshare",
+    "dq_referential_audit", "doc_keywords", "lang_source_chi2",
+    "epoch_plan", "vocab_coverage", "source_temperature_sample",
+    "embedding_norm_outliers", "data_mixture_report", "table_profile",
+    "table_profile_approx", "dsl_change_point", "dsl_parent_id",
+    "dsl_significant_terms", "esql_change_point", "dsl_global_agg",
+    "dsl_significant_text", "dsl_more_like_this", "dsl_normalize",
+]
+
+
+@pytest.mark.parametrize("name", SCALAR_ATTACH_KEYS)
+def test_scalar_attach_builds_no_jobs(spark, name):
+    """Building a query only builds a plan: no Spark job may start
+    before ``collect()``, so ``explain()`` is side-effect free and the
+    returned frame carries no build-time literals that go stale."""
+    from parquet_generator_spark.sources.catalog import load_tables
+
+    sc = spark.sparkContext
+    # table handles are memoized per session; their one-time footer
+    # read is table loading, not plan construction
+    load_tables(spark, SF_DIR)
+    group = f"build:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        entrymod.queries()[name](spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
 # the only queries allowed a BroadcastNestedLoopJoin: deliberately
