@@ -1,21 +1,19 @@
-"""Session cache hygiene for plan-internal materialization barriers.
+"""The package's one plan barrier and its per-query release.
 
-Several operators cut lineage with ``localCheckpoint()`` (iterative
-connected components, the banded-LSH edge stage, centroid builds).
-``localCheckpoint`` eagerly persists the frame's partitions as RDD
-storage blocks that live until the JVM garbage-collects the RDD — in
-a long-lived session running hundreds of queries (the driver bench,
-a production curation service) those blocks accumulate and squeeze
-the executor storage pool (round-8 verdict: 33 checkpoint sites,
-1 unpersist, and a non-reproducing 2-4.7x mid-session slowdown band).
+A plan barrier is a ``localCheckpoint`` that cuts lineage and is
+shared by later stages. Its partitions are RDD storage blocks that
+live until the JVM garbage-collects the RDD, so in a long-lived
+session they pile up query after query and squeeze executor storage.
 
-Fix: every transient barrier routes through :func:`checkpoint`,
-which registers the frame; a harness (bench.py, verify scripts, any
-long-lived caller) calls :func:`release_all` AFTER materializing a
-query's results, dropping the checkpointed blocks deterministically
-instead of waiting for GC. Deliberate cross-query memos (the
-near-dup edge cache) call ``localCheckpoint`` directly and are never
-tracked, so their reuse contract survives a release.
+Rule: every transient barrier is made by :func:`checkpoint`, which
+registers the frame; the caller drops the blocks with
+:func:`release_all` once a query's results are collected or written,
+or wraps the query in :func:`scope`. Two places call
+``localCheckpoint`` directly: the near-dup edge memo
+(``plans/llm_queries.py``), which must outlive the query that built
+it, and the ``foreachBatch`` body in ``streaming/windowed.py``, which
+runs on the streaming callback thread while the registry is
+process-global, so it drops its own frames with :func:`release`.
 
 IMPORTANT contract: ``localCheckpoint`` TRUNCATES lineage — once a
 tracked frame's blocks are dropped it cannot be recomputed. Callers
@@ -40,8 +38,17 @@ _WARN_THRESHOLD = 64
 _warned = False
 
 
-def _register(df: DataFrame) -> DataFrame:
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered for release by
+    :func:`release_all` or :func:`scope`. The lineage cut and
+    compute-once sharing are the same either way. Pass
+    ``eager=False`` when the first consumer reads every partition
+    (an aggregation, a join): materialization then fuses into that
+    job instead of running a job of its own while the plan is built.
+    Keep ``eager=True`` when the first consumer is partial (limit,
+    take) or when several subtrees of one job read the barrier."""
     global _warned
+    df = df.localCheckpoint(eager)
     _TRACKED.append(df)
     if len(_TRACKED) > _WARN_THRESHOLD and not _warned:
         _warned = True
@@ -50,35 +57,8 @@ def _register(df: DataFrame) -> DataFrame:
             f"checkpoints — a long-lived caller is accumulating "
             f"storage blocks without releasing. Wrap each query in "
             f"`with cache.scope(): ...` or call release_all() at "
-            f"query boundaries.", ResourceWarning, stacklevel=3)
+            f"query boundaries.", ResourceWarning, stacklevel=2)
     return df
-
-
-def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + registration for later
-    deterministic release via :func:`release_all`."""
-    return _register(df.localCheckpoint(eager))
-
-
-def lazy(df: DataFrame) -> DataFrame:
-    """Lazy tracked barrier: ``localCheckpoint(eager=False)`` +
-    registration. The lineage cut and compute-once sharing are the
-    same as the eager form, but materialization FUSES into the first
-    downstream job instead of running a dedicated job at plan-build
-    time — at bench scale each eager site was a whole extra job of
-    fixed scheduling overhead (round 13, guide §1.2: don't run jobs
-    you can fuse). Use for barriers whose first consumer reads every
-    partition (aggregations, joins); keep ``eager=True`` where the
-    first consumer is partial (limit/take) and splitting
-    materialization would be confusing."""
-    return _register(df.localCheckpoint(False))
-
-
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-checkpointed frame for release; returns it
-    unchanged, so chained sites read
-    ``expr.localCheckpoint().transform(cache.track)``."""
-    return _register(df)
 
 
 @contextlib.contextmanager
@@ -97,7 +77,7 @@ def scope() -> Iterator[None]:
     finally:
         global _warned
         while len(_TRACKED) > mark:
-            _drop_blocks(_TRACKED.pop())
+            release(_TRACKED.pop())
         _warned = False
 
 
@@ -105,24 +85,17 @@ def tracked_count() -> int:
     return len(_TRACKED)
 
 
-def _drop_blocks(df: DataFrame) -> bool:
-    """Unpersist the checkpointed RDD behind a localCheckpointed
-    DataFrame. The analyzed plan of such a frame is a ``LogicalRDD``
-    whose ``rdd()`` is the persisted (lineage-truncated) RDD;
-    ``unpersist`` drops its storage blocks immediately (verified:
+def release(df: DataFrame) -> bool:
+    """Drop one frame's checkpoint blocks now, without touching the
+    registry. The analyzed plan of a localCheckpointed frame is a
+    ``LogicalRDD`` whose ``rdd()`` is the persisted (lineage-truncated)
+    RDD; ``unpersist`` drops its storage blocks immediately (verified:
     ``sc.getRDDStorageInfo()`` returns to baseline)."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         return True
     except Exception:
         return False
-
-
-def release(df: DataFrame) -> bool:
-    """Drop one frame's checkpoint blocks immediately (no registry) —
-    for self-contained scopes like a foreachBatch body that must not
-    touch checkpoints tracked by an enclosing query."""
-    return _drop_blocks(df)
 
 
 def release_all(spark=None) -> int:
@@ -132,7 +105,7 @@ def release_all(spark=None) -> int:
     global _warned
     n = 0
     while _TRACKED:
-        if _drop_blocks(_TRACKED.pop()):
+        if release(_TRACKED.pop()):
             n += 1
     _warned = False
     return n

@@ -59,9 +59,10 @@ def _drop_hot_buckets(bands: DataFrame, keys: list[str],
     loss, never a silent truncation."""
     if bucket_cap is None:
         return bands
+    # lazy: materialized by the count below
     hot = (bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
            .filter(F.col("n") > bucket_cap)
-           .transform(_cache.lazy))  # materialized by the count below
+           .transform(_cache.checkpoint, eager=False))
     # stays eager: Python decides whether to log and anti-join
     n_hot = hot.count()
     if n_hot:
@@ -223,8 +224,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
         # the hot-bucket size pass re-derives the band explosion, so
         # pin the expensive signature stage to compute exactly once
         # (lazy: the hot-count job is its single first consumer, so
-        # materialization fuses into it — one fewer job, round 13)
-        sig = sig.transform(_cache.lazy)
+        # materialization fuses into it — one fewer job)
+        sig = sig.transform(_cache.checkpoint, eager=False)
     bands = sig.select(
         "id",
         F.posexplode(
@@ -242,7 +243,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
         "j -> struct(ids[i] AS id_a, ids[j] AS id_b))))")).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
-        .localCheckpoint().transform(_cache.track))
+        .transform(_cache.checkpoint))
     # verify pass: shingle only the candidate ids (a tiny fraction of
     # the corpus) and materialize them once. Without the checkpoints
     # the signature pipeline would re-run for the semi-join AND the
@@ -251,7 +252,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
     cand_ids = (cand.select(F.col("id_a").alias("id"))
                 .union(cand.select(F.col("id_b").alias("id")))
                 .distinct())
-    shc = sh.join(cand_ids, "id", "left_semi").localCheckpoint().transform(_cache.track)
+    shc = sh.join(cand_ids, "id", "left_semi").transform(_cache.checkpoint)
     a = shc.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = shc.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -343,13 +344,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # checkpoint the pair list BEFORE the symmetrizing union: both
     # union branches read `pairs`, so an unmaterialized pairs pipeline
     # (LSH + verify joins) would execute twice
-    pairs = pairs.select("id_a", "id_b").localCheckpoint().transform(_cache.track)
+    pairs = pairs.select("id_a", "id_b").transform(_cache.checkpoint)
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .union(pairs.select(F.col("id_b").alias("src"),
                                  F.col("id_a").alias("dst"))))
+    # lazy: materialized by the agg below, as are each round's labels
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id"))
-              .transform(_cache.lazy))  # materialized by the agg below
+              .transform(_cache.checkpoint, eager=False))
     # the label sums stay eager: the Python loop tests convergence
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
@@ -360,7 +362,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
                   .select(labels["id"],
                           F.least(F.col("label"),
                                   F.coalesce("nlabel", "label")).alias("label"))
-                  .transform(_cache.lazy))  # materialized by the agg below
+                  .transform(_cache.checkpoint, eager=False))
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             converged = True
@@ -391,10 +393,10 @@ def connected_components_star(pairs: DataFrame,
     edges = (pairs.select(F.col("id_a").alias("u"),
                           F.col("id_b").alias("v"))
              .filter(F.col("u") != F.col("v"))
-             .distinct().localCheckpoint().transform(_cache.track))
+             .distinct().transform(_cache.checkpoint))
     nodes = (edges.select(F.col("u").alias("id"))
              .union(edges.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint().transform(_cache.track))
+             .distinct().transform(_cache.checkpoint))
 
     def sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("v").alias("u"),
@@ -419,7 +421,7 @@ def connected_components_star(pairs: DataFrame,
     converged = False
     for _ in range(max_iter):
         edges = star(star(edges, large=True), large=False) \
-            .localCheckpoint().transform(_cache.track)
+            .transform(_cache.checkpoint)
         # stays eager: the Python loop tests convergence on it
         sig = edges.agg(
             F.count(F.lit(1)).alias("n"),
@@ -529,8 +531,8 @@ def simhash_pairs(df: DataFrame, id_col: str, content_col: str,
     if bucket_cap is not None:
         # pin the (expensive) signature expression to one computation;
         # the hot-bucket size pass re-derives only the cheap explode
-        # (lazy: fuses into the hot-count job, round 13)
-        sig = sig.transform(_cache.lazy)
+        # (lazy: fuses into the hot-count job)
+        sig = sig.transform(_cache.checkpoint, eager=False)
     mask = (1 << _BAND_BITS) - 1
     bands = sig.select(
         "id", "sig",
@@ -623,8 +625,8 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
            .withColumn("sig", minhash_signature("bh"))
            .select("id", "side", "sig"))
     if bucket_cap is not None:
-        # lazy: fuses into the hot-count job (round 13)
-        sig = sig.transform(_cache.lazy)
+        # lazy: fuses into the hot-count job
+        sig = sig.transform(_cache.checkpoint, eager=False)
     bands = sig.select(
         "id", "side",
         F.posexplode(
@@ -646,12 +648,12 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
         "b -> struct(a AS id_in, b AS id_corp))))")).alias("p"))
         .select("p.id_in", "p.id_corp")
         .distinct()
-        .localCheckpoint().transform(_cache.track))
+        .transform(_cache.checkpoint))
     cand_ids = (cand.select(F.col("id_in").alias("id"))
                 .union(cand.select(F.col("id_corp").alias("id")))
                 .distinct())
     shc = (sh.select("id", "sh")
-           .join(cand_ids, "id", "left_semi").localCheckpoint().transform(_cache.track))
+           .join(cand_ids, "id", "left_semi").transform(_cache.checkpoint))
     a = shc.select(F.col("id").alias("id_in"), F.col("sh").alias("sh_a"))
     b = shc.select(F.col("id").alias("id_corp"),
                    F.col("sh").alias("sh_b"))
@@ -781,15 +783,17 @@ def containment_pairs(df: DataFrame, id_col: str, content_col: str,
         F.expr(shingles_spark(content_col, k)).alias("sh"))
         .select("id", F.col("sh"), F.size("sh").alias("nsh"))
         .filter(F.col("nsh") > 0)
-        .localCheckpoint().transform(_cache.track))  # shingling reused by index + verify
+        .transform(_cache.checkpoint))  # shingling reused by index + verify
     inv = sh.select("id", "nsh", F.explode("sh").alias("s"))
     dfreq = inv.groupBy("s").agg(F.count(F.lit(1)).alias("dfq"))
     ranked = inv.join(dfreq, "s").withColumn(
         "rk", F.row_number().over(
             Window.partitionBy("id").orderBy(F.asc("dfq"), F.asc("s"))))
+    # tiny; reused for hot-count + join (lazy: the cap agg below
+    # materializes it)
     prefix = (ranked.filter(F.expr(f"rk <= {_prefix_bound(threshold)}"))
               .select("id", "s", "dfq")
-              .transform(_cache.lazy))  # tiny; reused for hot-count + join (lazy: the cap agg below materializes it)
+              .transform(_cache.checkpoint, eager=False))
     if shingle_df_cap is not None:
         # one bounded-scalar job over the (tiny, checkpointed) prefix;
         # stays eager because Python decides whether to log and prune

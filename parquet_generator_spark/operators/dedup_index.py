@@ -99,7 +99,7 @@ def train_dedup_index(spark: SparkSession, corpus: DataFrame,
     snapshot commits; re-train overwrites, old versions stay
     time-travelable."""
     sig = _staged(corpus, id_col, content_col, k)
-    sig = sig.transform(_cache.lazy)  # fuses into first consumer job (round 13)
+    sig = sig.transform(_cache.checkpoint, eager=False)
     bands = _bands_of(sig)
     hashes = sig.select("id", F.md5("_text").alias("h"))
     shingles = sig.select("id", "sh")
@@ -145,7 +145,7 @@ def append_dedup_batch(spark: SparkSession, root: str,
         raise FileNotFoundError(
             f"no dedup index at {root} — train_dedup_index first")
     sig = _staged(batch, id_col, content_col, meta["k"])
-    sig = sig.transform(_cache.lazy)  # fuses into first consumer job (round 13)
+    sig = sig.transform(_cache.checkpoint, eager=False)
     bands = _bands_of(sig)
 
     snapshots.commit_append(
@@ -191,7 +191,7 @@ def classify_served(spark: SparkSession, root: str, batch: DataFrame,
     evaluated on stored-count + batch-count per bucket — the same
     TOTAL-size semantics as `_drop_hot_buckets` over the union."""
     sig = _staged(batch, id_col, content_col, k)
-    sig = sig.transform(_cache.lazy)  # fuses into first consumer job (round 13)
+    sig = sig.transform(_cache.checkpoint, eager=False)
     inc_bands = _bands_of(sig)
     inc_h = sig.select("id", F.md5("_text").alias("h"))
 
@@ -221,7 +221,7 @@ def classify_served(spark: SparkSession, root: str, batch: DataFrame,
                        .alias("n")))
         hot = (tot.filter(F.col("n") > bucket_cap)
                .select(*keys)
-               .localCheckpoint().transform(_cache.track))
+               .transform(_cache.checkpoint))
         inc_bands = inc_bands.join(F.broadcast(hot), keys,
                                    "left_anti")
         st_bands = st_bands.join(F.broadcast(hot), keys, "left_anti")
@@ -234,7 +234,7 @@ def classify_served(spark: SparkSession, root: str, batch: DataFrame,
             .join(F.broadcast(inc_bands), keys)
             .select(F.col("id").alias("id_in"), "id_corp")
             .distinct()
-            .localCheckpoint().transform(_cache.track))
+            .transform(_cache.checkpoint))
     a = sig.select(F.col("id").alias("id_in"),
                    F.col("sh").alias("sh_a"))
     b = (st_sh.join(F.broadcast(cand.select(F.col("id_corp")

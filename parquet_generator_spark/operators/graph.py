@@ -41,7 +41,7 @@ def pagerank(pairs: DataFrame, iters: int = 3,
              .unionByName(pairs.select(F.col("id_b").alias("u"),
                                        F.col("id_a").alias("v")))
              .repartition("u")
-             .localCheckpoint().transform(_cache.track))
+             .transform(_cache.checkpoint))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     # stays eager: Python branches on the node count and seeds the
     # rank column from it
@@ -52,7 +52,7 @@ def pagerank(pairs: DataFrame, iters: int = 3,
     # undirected: out-degree = degree; co-partitioned join, no
     # exchange, and the checkpoint frees the loop from re-deriving it
     edgesd = (edges.join(deg, "u").select("u", "v", "deg")
-              .localCheckpoint().transform(_cache.track))
+              .transform(_cache.checkpoint))
     base = (1.0 - damping) / n
     ranks = deg.select("u", F.lit(round(1.0 / n, PR_QUANT))
                        .alias("rank"))
@@ -65,7 +65,7 @@ def pagerank(pairs: DataFrame, iters: int = 3,
                  .agg(F.round(F.lit(base)
                               + F.lit(damping) * F.sum("c"),
                               PR_QUANT).alias("rank"))
-                 .localCheckpoint(False).transform(_cache.track))
+                 .transform(_cache.checkpoint, eager=False))
     return ranks.select(F.col("u").alias("id"), "rank")
 
 

@@ -894,46 +894,48 @@ def kmeans_lloyd(df: DataFrame, k: int = 8, iters: int = 2,
     # KMeans does; lazy persist, populated by the first round's pass)
     if iters > 1:
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    init_rows = base.orderBy("id").limit(k).collect()  # bounded: k rows
-    if not init_rows:
-        raise ValueError("kmeans_lloyd: input has no rows")
-    # fewer rows than k: clamp, matching the oracle's LIMIT-k init
-    # (which yields one centroid per existing row)
-    k = min(k, len(init_rows))
-    cents = [[round(float(x), quant) for x in r["e"]] for r in init_rows]
-    dim = len(cents[0])
+    try:
+        init_rows = base.orderBy("id").limit(k).collect()  # bounded: k rows
+        if not init_rows:
+            raise ValueError("kmeans_lloyd: input has no rows")
+        # fewer rows than k: clamp, matching the oracle's LIMIT-k init
+        # (which yields one centroid per existing row)
+        k = min(k, len(init_rows))
+        cents = [[round(float(x), quant) for x in r["e"]] for r in init_rows]
+        dim = len(cents[0])
 
-    def mean_cols():
-        return [F.round(F.avg(F.col("e")[d].cast("double")), quant)
-                .alias(f"m{d}") for d in range(dim)]
+        def mean_cols():
+            return [F.round(F.avg(F.col("e")[d].cast("double")), quant)
+                    .alias(f"m{d}") for d in range(dim)]
 
-    def assigned(cs: list[list]) -> DataFrame:
-        if assign == "arrow":
-            return _kmeans_assign_arrow(base, cs)
-        return base.withColumn("cid", _kmeans_assign("e", cs))
+        def assigned(cs: list[list]) -> DataFrame:
+            if assign == "arrow":
+                return _kmeans_assign_arrow(base, cs)
+            return base.withColumn("cid", _kmeans_assign("e", cs))
 
-    for _ in range(iters - 1):
-        stats = assigned(cents).groupBy("cid").agg(*mean_cols())
-        got = {int(r["cid"]): [float(r[f"m{d}"]) for d in range(dim)]
-               for r in stats.collect()}  # bounded: k rows
-        cents = [got.get(i, cents[i]) for i in range(k)]
+        for _ in range(iters - 1):
+            stats = assigned(cents).groupBy("cid").agg(*mean_cols())
+            got = {int(r["cid"]): [float(r[f"m{d}"]) for d in range(dim)]
+                   for r in stats.collect()}  # bounded: k rows
+            cents = [got.get(i, cents[i]) for i in range(k)]
 
-    per = (assigned(cents)
-           .groupBy("cid")
-           .agg(F.count(F.lit(1)).alias("n"), *mean_cols()))
-    norm_sq = None
-    for d in range(dim):
-        term = F.col(f"m{d}") * F.col(f"m{d}")
-        norm_sq = term if norm_sq is None else norm_sq + term
-    out = (per.select("cid", "n",
-                      F.round(F.sqrt(norm_sq), 4).alias("c_norm"))
-           .orderBy("cid"))
-    # materialize the bounded k-row result so the persisted scan
-    # frame can be released NOW — without this, repeated invocations
-    # in one session (bench sweeps, test suites) accumulate cached
-    # blocks until executor storage evicts them
-    rows = out.collect()  # bounded: k rows
-    base.unpersist()
+        per = (assigned(cents)
+               .groupBy("cid")
+               .agg(F.count(F.lit(1)).alias("n"), *mean_cols()))
+        norm_sq = None
+        for d in range(dim):
+            term = F.col(f"m{d}") * F.col(f"m{d}")
+            norm_sq = term if norm_sq is None else norm_sq + term
+        out = (per.select("cid", "n",
+                          F.round(F.sqrt(norm_sq), 4).alias("c_norm"))
+               .orderBy("cid"))
+        # materialize the bounded k-row result so the persisted scan
+        # frame can be released NOW — without this, repeated invocations
+        # in one session (bench sweeps, test suites) accumulate cached
+        # blocks until executor storage evicts them
+        rows = out.collect()  # bounded: k rows
+    finally:
+        base.unpersist()
     return df.sparkSession.createDataFrame(rows, out.schema)
 
 

@@ -102,7 +102,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.sum(_rev()).alias("raw_value"))
           # part-cardinality; materialize once so the scalar threshold
           # doesn't re-run the whole lineitem scan + aggregate
-          .localCheckpoint().transform(_cache.track))
+          .transform(_cache.checkpoint))
     thresh = pv.agg((Q11_FACTOR * F.avg("raw_value")).alias("thresh"))
     return (broadcast_scalars(pv, thresh)
             .filter(F.col("raw_value") > F.col("thresh"))

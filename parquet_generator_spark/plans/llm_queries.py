@@ -42,6 +42,8 @@ def near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     if got is not None:
         return got
     docs = load_table(spark, "documents", sf_dir)
+    # raw, untracked localCheckpoint: the memo outlives the query that
+    # built it, so cache.release_all must not drop its blocks
     pairs = (dedup.minhash_lsh_pairs(docs, "doc_id", "text",
                                      JACCARD_THRESHOLD)
              .localCheckpoint())

@@ -139,7 +139,8 @@ def gini_source_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds the totals aggregate AND the output — checkpoint it so
     # the corpus groupBy runs once. Lazy: the first consumer is the
     # full-scan totals aggregate.
-    ranked = cache.lazy(per.withColumn("rk", F.row_number().over(w)))
+    ranked = cache.checkpoint(per.withColumn("rk", F.row_number().over(w)),
+                              eager=False)
     tot = ranked.agg(
         F.sum("tokens").alias("t"),
         F.count(F.lit(1)).alias("k"),

@@ -103,21 +103,21 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(ANN_QUERY_PRED)
     truth = (similarity.brute_force_topk(emb, queries, ANN_K)
-             .select("qid", "nid").localCheckpoint().transform(_cache.track))
+             .select("qid", "nid").transform(_cache.checkpoint))
     n_truth = truth.count()  # bounded: queries x k
     cents = similarity.make_centroids_from_corpus(emb, IVF_CURVE_CELLS)
     c = (similarity.ivf_assign_cells(emb, cents, 1)
          .select(F.col("vec_id").alias("nid"),
                  F.col("embedding").alias("nvec"),
                  similarity.norm("embedding").alias("nn"), "cell")
-         .localCheckpoint().transform(_cache.track))
+         .transform(_cache.checkpoint))
     qmax = (similarity.ivf_assign_cells(queries, cents,
                                         max(IVF_PROBES))
             .select(F.col("vec_id").alias("qid"),
                     F.col("embedding").alias("qvec"),
                     similarity.norm("embedding").alias("qn"),
                     "cell", "probe_rank")
-            .localCheckpoint().transform(_cache.track))
+            .transform(_cache.checkpoint))
     # one corpus-to-query join at the loosest setting; min shared
     # probe_rank decides every tighter setting's membership
     scored = (c.join(F.broadcast(qmax), "cell")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_generator_spark.operators import dedup, similarity
+from parquet_generator_spark.operators import cache, dedup, similarity
 from parquet_generator_spark.operators.util import broadcast_scalars
 from parquet_generator_spark.plans.llm_queries import near_dup_edges
 from parquet_generator_spark.sources.catalog import load_table
@@ -43,7 +43,7 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled = assign.join(emb.select("vec_id", "label"), "vec_id")
     cnt = (labeled.groupBy("cell", "label")
            .agg(F.count(F.lit(1)).alias("n"))
-           .localCheckpoint())  # bounded: cells x labels rows
+           .transform(cache.checkpoint))  # bounded: cells x labels rows
     per_cell = cnt.groupBy("cell").agg(F.sum("n").alias("nc"))
     per_label = cnt.groupBy("label").agg(F.sum("n").alias("nl"))
     n_total = float(cnt.agg(F.sum("n")).collect()[0][0])

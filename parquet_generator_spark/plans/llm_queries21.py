@@ -29,8 +29,8 @@ Spark-first shape (the kmeans/pagerank iterative-join posture):
   engines, so the DuckDB oracle replays the identical K rounds as
   unrolled CTEs with scalar subqueries — no Spark-result leakage
   into the oracle.
-- per-round lineage is cut with a TRACKED localCheckpoint (the
-  cache-hygiene registry), so K rounds cost K passes, not K^2.
+- per-round lineage is cut with ``cache.checkpoint``, so K rounds
+  cost K passes, not K^2.
 
 Scale: per round = one shuffle keyed by pair over the vocab table +
 one bounded collect (1 row). State between rounds is the evolving
@@ -102,7 +102,7 @@ def bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         # double-pass leftmost replace == greedy BPE merge for
         # left != right; self-pairs on runs >= 5 deviate (see module
         # docstring) — identically in both engines; the merge pair
-        # is a plan literal.  eager=False (round 13): the checkpoint
+        # is a plan literal.  eager=False: the checkpoint
         # still truncates lineage, but its materialization fuses
         # into the NEXT round's pair-count job instead of running a
         # separate eager job per round — K jobs instead of 2K for

@@ -59,7 +59,7 @@ def source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared = (pairs.groupBy("p.src_a", "p.src_b")
               .agg(F.count(F.lit(1)).alias("shared_shingles"))
               .select("src_a", "src_b", "shared_shingles")
-              .localCheckpoint().transform(_cache.track))
+              .transform(_cache.checkpoint))
     a = (shared.filter(F.col("src_a") == F.col("src_b"))
          .select("src_a", F.col("shared_shingles").alias("n_a")))
     b = (shared.filter(F.col("src_a") == F.col("src_b"))

@@ -184,9 +184,10 @@ def dsir_importance_weights(spark: SparkSession,
     # corpus passes in the before-plan; round 13, guide §1.2) — the
     # checkpoint pins it at 128 rows so only the model build and the
     # scoring pass scan the corpus
-    dist = cache.lazy(
+    dist = cache.checkpoint(
         tok.groupBy("b").agg(F.sum(is_t).alias("nt"),
-                             F.count(F.lit(1)).alias("nr")))
+                             F.count(F.lit(1)).alias("nr")),
+        eager=False)
     totals = dist.agg(F.sum("nt").alias("_tt"),
                       F.sum("nr").alias("_tr"))
     sb = _DSIR_SMOOTH * DSIR_BUCKETS
@@ -385,7 +386,7 @@ def quality_classifier_gd(spark: SparkSession,
                   & ~F.expr("contains(page, '{')")
                   & (kept >= _C4_MIN_SENTENCES))
               .drop("page"))
-    staged = staged.localCheckpoint()  # 3 reuses of the features
+    staged = cache.checkpoint(staged)  # 3 reuses of the features
 
     x1, x2, x3, y = _gd_feature_exprs("spark")
     w = [0.0, 0.0, 0.0, 0.0]

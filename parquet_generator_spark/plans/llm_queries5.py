@@ -353,7 +353,7 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count(F.lit(1)).alias("cnt"))
              # EAGER: the final job reads the model through three
              # subtrees (pair branch + both unigram join sides)
-             .localCheckpoint().transform(_cache.track))
+             .transform(_cache.checkpoint))
     tot = model.agg(
         F.sum(F.when(F.col("w2").isNull(), F.col("cnt")))
         .alias("t_w"),
@@ -537,7 +537,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .alias(c)
                          for t, c in zip(BM25_TERMS, tf_cols)])
                .filter(F.col("dl") > 0))
-    per_doc = _cache.lazy(per_doc)
+    per_doc = _cache.checkpoint(per_doc, eager=False)
     # stays eager: n_docs and the document frequencies enter as
     # literals so each idf constant-folds at plan time; this is a
     # benchmark key, so its plan shape is held fixed

@@ -59,7 +59,7 @@ def bigram_logprob_frame(docs: DataFrame) -> DataFrame:
     # same shape holds at 100 TB.
     model = (bg.groupBy("w1", "w2")
              .agg(F.count(F.lit(1)).alias("c12"))
-             .localCheckpoint().transform(_cache.track))
+             .transform(_cache.checkpoint))
     left = model.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (t.select(F.explode("tk").alias("w"))
              .agg(F.countDistinct("w").alias("v")))

@@ -75,7 +75,7 @@ def _ip_source(ev: DataFrame) -> DataFrame:
     cost one split chain per use over all cores."""
     return (widen_if_narrow(ev)
             .select(F.expr(IP_S).alias("client_ip"))
-            .localCheckpoint().transform(_cache.track))
+            .transform(_cache.checkpoint))
 
 
 IP_FILTER = {"bool": {

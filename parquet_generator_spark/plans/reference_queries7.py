@@ -99,11 +99,11 @@ def dsl_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy — checkpoint it so the total and the entropy aggregate
     # share ONE explode pass. Lazy: the first consumer is the
     # full-scan sum aggregate.
-    chars = cache.lazy(
+    chars = cache.checkpoint(
         ev.select(F.explode(F.expr(
             "transform(sequence(1, length(event_type)), "
             "i -> substring(event_type, i, 1))")).alias("ch"))
-        .groupBy("ch").agg(F.count(F.lit(1)).alias("n")))
+        .groupBy("ch").agg(F.count(F.lit(1)).alias("n")), eager=False)
     p = F.col("n") / F.col("total")
     ent = (broadcast_scalars(chars, chars.agg(F.sum("n").alias("total")))
            .agg(F.round(-F.sum(p * F.log2(p)), 4).alias("entropy")))

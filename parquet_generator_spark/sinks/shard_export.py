@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_generator_spark.operators import cache
 from parquet_generator_spark.operators.text import toks_spark
 
 
@@ -37,7 +38,7 @@ def with_global_rank(df: DataFrame, order_col: str,
     parts = (df.repartitionByRange(n_parts, F.col(order_col))
              .sortWithinPartitions(order_col)
              .withColumn("_pid", F.spark_partition_id())
-             .localCheckpoint())   # pin partitioning for both passes
+             .transform(cache.checkpoint))  # pin partitioning, 2 passes
     counts = dict(parts.groupBy("_pid").count()
                   .collect())      # P rows — driver-safe at any scale
     offsets, acc = {}, 0
@@ -72,22 +73,25 @@ def export_shards(df: DataFrame, dest: str, docs_per_shard: int,
     """Write ``df`` as ``dest/data`` partitioned into fixed-size
     shards (shard = global_rank(id) // docs_per_shard) plus
     ``dest/manifest`` with per-shard stats. Deterministic: same
-    input -> same shard membership, any engine, any layout."""
-    ranked = with_global_rank(df, id_col)
-    sharded = (ranked.withColumn(
-        "shard", (F.col("rank") / docs_per_shard).cast("long"))
-        .drop("rank")
-        .withColumn("n_tokens", F.size(F.expr(toks_spark(text_col))))
-        .localCheckpoint())       # rank once, write data + manifest
-    (sharded.write.mode("overwrite").partitionBy("shard")
-     .parquet(f"{dest}/data"))
-    manifest = (sharded.groupBy("shard")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.sum("n_tokens").alias("n_tokens"),
-                     F.min(id_col).alias("min_id"),
-                     F.max(id_col).alias("max_id")))
-    manifest.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{dest}/manifest")
+    input -> same shard membership, any engine, any layout. Both
+    outputs are written before it returns, so it releases its own
+    checkpoints."""
+    with cache.scope():
+        ranked = with_global_rank(df, id_col)
+        sharded = (ranked.withColumn(
+            "shard", (F.col("rank") / docs_per_shard).cast("long"))
+            .drop("rank")
+            .withColumn("n_tokens", F.size(F.expr(toks_spark(text_col))))
+            .transform(cache.checkpoint))  # rank once, data + manifest
+        (sharded.write.mode("overwrite").partitionBy("shard")
+         .parquet(f"{dest}/data"))
+        manifest = (sharded.groupBy("shard")
+                    .agg(F.count(F.lit(1)).alias("n_docs"),
+                         F.sum("n_tokens").alias("n_tokens"),
+                         F.min(id_col).alias("min_id"),
+                         F.max(id_col).alias("max_id")))
+        manifest.coalesce(1).write.mode("overwrite") \
+            .parquet(f"{dest}/manifest")
 
 
 def read_manifest(spark: SparkSession, dest: str) -> DataFrame:

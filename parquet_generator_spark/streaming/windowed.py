@@ -250,7 +250,10 @@ def run_topk_stream_update(stream_df: DataFrame, counts_path: str,
         merged = merge_latest(existing, b,
                               ["win_start", "event_type"], ["_batch"])
         # localCheckpoint before the swap: the merged plan READS
-        # counts_path, which the swap deletes
+        # counts_path, which the swap deletes. Raw, not cache.checkpoint:
+        # this body runs on the streaming callback thread and the
+        # registry is process-global, so a query's release_all could
+        # drop these blocks mid-batch; each frame is released below
         merged = merged.localCheckpoint()
         _swap(merged, counts_path)
         # bounded driver list: windows updated THIS batch only

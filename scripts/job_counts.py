@@ -7,7 +7,12 @@ keys with many jobs are the first place to look (guide §1.2).
 
 Jobs are split by phase: ``build_jobs`` ran while ``queries()[key]``
 built the DataFrame (eager actions inside plan construction),
-``run_jobs`` ran during its ``collect()``.
+``run_jobs`` ran during its ``collect()``. ``tracked`` is the number of
+barriers the key registered with ``cache.checkpoint``, and
+``leaked_blocks`` the storage blocks still held after
+``cache.release_all`` minus those held before the key ran: anything
+above 0 is a barrier that bypassed the registry (the near-dup edge
+memo counts once, at the first key that builds it for the SF).
 
 Usage: python scripts/job_counts.py key1 key2 ...
 """
@@ -46,6 +51,7 @@ def main() -> None:
         if name not in qs:
             print(f"{name}: UNKNOWN", file=sys.stderr)
             continue
+        blocks0 = cache.storage_block_count(spark)
         sc.setJobGroup(f"{name}:build", name)
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
@@ -56,9 +62,12 @@ def main() -> None:
         build_jobs = tracker.getJobIdsForGroup(f"{name}:build")
         run_jobs = tracker.getJobIdsForGroup(f"{name}:run")
         sc.setJobGroup("other", "other")
+        tracked = cache.tracked_count()
         cache.release_all(spark)
+        leaked = cache.storage_block_count(spark) - blocks0
         print(f"{name}: build_jobs={len(build_jobs)} "
-              f"run_jobs={len(run_jobs)} build={t_build:.2f}s "
+              f"run_jobs={len(run_jobs)} tracked={tracked} "
+              f"leaked_blocks={leaked} build={t_build:.2f}s "
               f"total={t_total:.2f}s rows={n}")
     spark.stop()
 

@@ -6,6 +6,8 @@ mid-session slowdown mechanism (33 checkpoint sites, 1 unpersist)."""
 
 from __future__ import annotations
 
+import pytest
+
 from parquet_generator_spark.operators import cache
 
 SF = "/root/testdata/sf0.001"
@@ -40,6 +42,31 @@ def test_checkpoint_blocks_release_and_stay_stable(spark):
     floor2 = cache.storage_block_count(spark)
     assert floor2 == floor1, "second pass must not grow the floor"
     assert rows1 == rows2, "release must not change results"
+
+
+@pytest.mark.parametrize("key", ["ntile_deciles", "quality_classifier_gd",
+                                 "cluster_purity", "export_shards"])
+def test_plan_barriers_release_to_baseline(spark, tmp_path, key):
+    """Every transient barrier a query builds is registered, so
+    release_all brings the storage-block count back to where it was
+    before the query. export_shards writes its output before it
+    returns, so it releases its own barriers on the way out. (The
+    count may only fall below the base if the JVM cleaner drops an
+    older frame meanwhile.)"""
+    cache.release_all(spark)
+    base = cache.storage_block_count(spark)
+    if key == "export_shards":
+        from parquet_generator_spark.sinks.shard_export import export_shards
+        from parquet_generator_spark.sources.catalog import load_table
+        export_shards(load_table(spark, "documents", SF),
+                      str(tmp_path / "shards"), docs_per_shard=64)
+        assert cache.tracked_count() == 0
+        assert cache.storage_block_count(spark) <= base
+    else:
+        _run(spark, key)
+        assert cache.tracked_count() >= 1, "barrier not registered"
+    cache.release_all(spark)
+    assert cache.storage_block_count(spark) <= base
 
 
 def test_release_is_idempotent_and_safe_when_empty(spark):
@@ -78,11 +105,11 @@ def test_unreleased_accumulation_warns(spark):
     import warnings as _w
 
     cache.release_all(spark)
-    df = spark.range(1).localCheckpoint()
+    df = spark.range(1)
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
         for _ in range(cache._WARN_THRESHOLD + 1):
-            cache.track(df)
+            cache.checkpoint(df, eager=False)
         msgs = [r for r in rec if issubclass(r.category, ResourceWarning)]
     assert len(msgs) == 1, "warn exactly once per accumulation episode"
     assert "release_all" in str(msgs[0].message)

@@ -191,9 +191,10 @@ def test_bm25_term_with_quote_builds_and_counts(spark, tmp_path,
           ).write.parquet(str(d / "documents.parquet"))
     monkeypatch.setattr(L5, "BM25_TERMS", ("vector", "it's"))
     per_doc = {}
-    lazy = L5._cache.lazy
-    monkeypatch.setattr(L5._cache, "lazy",
-                        lambda df: per_doc.setdefault("df", lazy(df)))
+    checkpoint = L5._cache.checkpoint
+    monkeypatch.setattr(L5._cache, "checkpoint",
+                        lambda df, eager=True:
+                        per_doc.setdefault("df", checkpoint(df, eager)))
     top = L5.bm25_topk(spark, str(d)).collect()
     assert [(r["rank"], r["doc_id"]) for r in top] == [(1, 0)]
     tf = {r["doc_id"]: (r["_tf0"], r["_tf1"])

@@ -62,6 +62,20 @@ def test_broadcast_scalars_is_a_lazy_one_row_subquery(spark):
         two.collect()
 
 
+def test_kmeans_lloyd_unpersists_on_empty_input(spark):
+    """The (id, vec) frame kmeans_lloyd persists across rounds is
+    released on the error path too: an empty input raises and leaves
+    nothing cached."""
+    from pyspark import StorageLevel
+
+    emb = load_table(spark, "embeddings", SF).filter(F.lit(False))
+    with pytest.raises(ValueError, match="no rows"):
+        similarity.kmeans_lloyd(emb, k=4, iters=2)
+    base = emb.select(F.col("vec_id").alias("id"),
+                      F.col("embedding").alias("e"))
+    assert base.storageLevel == StorageLevel(False, False, False, False)
+
+
 def test_minhash_recall_equals_exact(spark):
     docs = load_table(spark, "documents", SF)
     exact = {(r["id_a"], r["id_b"])

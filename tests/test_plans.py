@@ -358,6 +358,25 @@ def test_no_empty_partition_windows_in_source():
     assert {f: n for f, n in sites.items() if n} == allowed
 
 
+def test_barriers_go_through_cache_checkpoint():
+    """Tripwire for untracked plan barriers: a raw
+    ``.localCheckpoint(`` is never released by ``cache.release_all``,
+    so its storage blocks outlive the query. Only ``operators/cache.py``
+    makes barriers, apart from two pinned exemptions: the near-dup edge
+    memo, which must outlive its query, and the streaming foreachBatch
+    body, which releases its own frames on the callback thread."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent \
+        / "parquet_generator_spark"
+    allowed = {"plans/llm_queries.py": 1, "streaming/windowed.py": 2}
+    sites = {str(p.relative_to(pkg)):
+             p.read_text().count(".localCheckpoint(")
+             for p in pkg.rglob("*.py")}
+    del sites["operators/cache.py"]
+    assert {f: n for f, n in sites.items() if n} == allowed
+
+
 @pytest.mark.parametrize("name", ["q15_top_supplier", "vocab_coverage",
                                   "dsl_significant_terms",
                                   "embedding_norm_outliers"])
